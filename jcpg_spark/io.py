@@ -13,10 +13,11 @@ so this module provides the same contract over plain parquet:
   list carries. ``mode="append"`` commits an O(new-data) append snapshot
   (parent directories + one new), no rewrite.
 - ``read_table(snapshot=...)`` time-travels to any logged snapshot
-  (``VERSION AS OF``); ``rollback`` is an atomic pointer swap;
-  ``expire_snapshots`` deletes unreferenced data directories
-  (table maintenance, pairs with ``compaction_plan``); ``snapshots``
-  is the ``.snapshots`` metadata view.
+  (``VERSION AS OF``); ``read_added`` reads only the rows the current
+  snapshot added (the incremental append scan); ``rollback`` is an
+  atomic pointer swap; ``expire_snapshots`` deletes unreferenced data
+  directories (table maintenance, pairs with ``compaction_plan``);
+  ``snapshots`` is the ``.snapshots`` metadata view.
 - ``is_committed`` / ``read_table`` give stage-skip resume: a stage whose
   manifest exists is never recomputed.
 
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
+NUM_BUCKETS = 32  # output files of a bucketed write
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -132,7 +134,6 @@ def write_table(
     base_dir: str,
     name: str,
     bucket_col: str | None = None,
-    num_buckets: int = 32,
     mode: str = "replace",
 ) -> dict:
     """Write ``df`` as a committed table SNAPSHOT; returns the manifest.
@@ -149,9 +150,10 @@ def write_table(
     pointer keeps the full snapshot log, so ``read_table(snapshot=...)``
     time-travels and ``rollback`` is a pointer swap.
 
-    ``bucket_col`` hash-distributes output files by the column (the
-    stand-in for Iceberg ``bucket(N, col)`` partitioning — co-locates
-    later equi-joins on that column and bounds file sizes under skew).
+    ``bucket_col`` hash-distributes output into ``NUM_BUCKETS`` files by
+    the column (the stand-in for Iceberg ``bucket(N, col)`` partitioning —
+    co-locates later equi-joins on that column and bounds file sizes
+    under skew).
 
     Manifest content stays deterministic (no timestamps): snapshot ids
     are a monotone counter, lineage is partition id -> rows of the data
@@ -169,13 +171,12 @@ def write_table(
     # current pointer sits below later logged snapshots, and current+1
     # would collide with (and overwrite the data directory of) a live
     # logged snapshot
-    prev_ids = [e["id"] for e in prev.get("snapshots", [])] if prev else []
-    snap_id = max([prev.get("snapshot_id", 0)] + prev_ids) + 1 if prev else 1
+    snap_id = max(e["id"] for e in prev["snapshots"]) + 1 if prev else 1
     snap_dir = f"snap-{snap_id}"
 
     out = df
     if bucket_col is not None:
-        out = df.repartition(num_buckets, F.col(bucket_col))
+        out = df.repartition(NUM_BUCKETS, F.col(bucket_col))
     # per-partition lineage computed on the same data that is written
     out = out.withColumn("_pid", F.spark_partition_id())
     out.write.mode("overwrite").parquet(os.path.join(path, snap_dir))
@@ -186,7 +187,7 @@ def write_table(
     lineage = {str(r["_pid"]): r["count"] for r in lineage_rows}
     new_rows = sum(lineage.values())
     if mode == "append":
-        data_dirs = list(prev.get("data_dirs", [])) + [snap_dir]
+        data_dirs = prev["data_dirs"] + [snap_dir]
         n_rows = int(prev["rows"]) + new_rows
     else:
         data_dirs = [snap_dir]
@@ -194,26 +195,25 @@ def write_table(
     entry = {
         "id": snap_id,
         "op": mode,
-        "parent": prev.get("snapshot_id") if prev else None,
+        "parent": prev["snapshot_id"] if prev else None,
         "rows": n_rows,
         "partitions": len(lineage),
         "lineage": lineage,
         "data_dirs": data_dirs,
         "schema": [f.name for f in df.schema.fields],
         "bucket_col": bucket_col,
-        "num_buckets": num_buckets if bucket_col else None,
+        "num_buckets": NUM_BUCKETS if bucket_col else None,
     }
-    log = list(prev.get("snapshots", [])) if prev else []
-    log.append(entry)
+    log = (prev["snapshots"] if prev else []) + [entry]
     manifest = {
-        # v1-compatible top-level view of the CURRENT snapshot
+        # top-level view of the CURRENT snapshot
         "table": name,
         "rows": n_rows,
         "partitions": len(lineage),
         "lineage": lineage,
         "schema": entry["schema"],
         "bucket_col": bucket_col,
-        "num_buckets": num_buckets if bucket_col else None,
+        "num_buckets": NUM_BUCKETS if bucket_col else None,
         "format_version": 2,
         "snapshot_id": snap_id,
         "data_dirs": data_dirs,
@@ -224,33 +224,32 @@ def write_table(
 
 
 def _snapshot_entry(manifest: dict, snapshot: int) -> dict:
-    for e in manifest.get("snapshots", []):
+    for e in manifest["snapshots"]:
         if e["id"] == snapshot:
             return e
     raise KeyError(f"snapshot {snapshot} not in log "
-                   f"{[e['id'] for e in manifest.get('snapshots', [])]}")
+                   f"{[e['id'] for e in manifest['snapshots']]}")
 
 
 def read_table(
     spark: SparkSession, base_dir: str, name: str, snapshot: int | None = None
 ) -> DataFrame:
     """Current table state, or — with ``snapshot`` — the table AS OF that
-    committed snapshot id (Iceberg ``VERSION AS OF`` time travel). Legacy
-    v1 tables (flat parquet + manifest) read from the table root."""
+    committed snapshot id (Iceberg ``VERSION AS OF`` time travel)."""
+    man = read_manifest(base_dir, name)
+    entry = _snapshot_entry(man, snapshot) if snapshot is not None else man
+    return _read_dirs(spark, base_dir, name, entry["data_dirs"])
+
+
+def read_added(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
+    """Rows the CURRENT snapshot added (Iceberg's incremental append scan):
+    the new directory of an append, the whole table after a replace."""
+    return _read_dirs(spark, base_dir, name, read_manifest(base_dir, name)["data_dirs"][-1:])
+
+
+def _read_dirs(spark: SparkSession, base_dir: str, name: str, dirs: list[str]) -> DataFrame:
     path = table_path(base_dir, name)
-    man = read_manifest(base_dir, name) if os.path.exists(
-        os.path.join(path, MANIFEST)
-    ) else None
-    if man is None or "data_dirs" not in man:
-        df = spark.read.parquet(path)  # legacy v1 layout
-    else:
-        dirs = (
-            _snapshot_entry(man, snapshot)["data_dirs"]
-            if snapshot is not None
-            else man["data_dirs"]
-        )
-        df = spark.read.parquet(*[os.path.join(path, d) for d in dirs])
-    return df.drop("_pid") if "_pid" in df.columns else df
+    return spark.read.parquet(*[os.path.join(path, d) for d in dirs]).drop("_pid")
 
 
 def read_manifest(base_dir: str, name: str) -> dict:
@@ -261,20 +260,17 @@ def read_manifest(base_dir: str, name: str) -> dict:
 def snapshots(base_dir: str, name: str) -> list[dict]:
     """Snapshot log (id, op, parent, rows) — Iceberg's ``.snapshots``
     metadata table for this stand-in."""
-    man = read_manifest(base_dir, name)
-    log = man.get("snapshots")
-    if log is None:  # legacy v1 table: synthesize a single-entry log
-        return [{"id": 1, "op": "replace", "parent": None, "rows": man["rows"]}]
     return [
-        {k: e[k] for k in ("id", "op", "parent", "rows")} for e in log
+        {k: e[k] for k in ("id", "op", "parent", "rows")}
+        for e in read_manifest(base_dir, name)["snapshots"]
     ]
 
 
 def rollback(base_dir: str, name: str, snapshot: int) -> dict:
     """Atomic pointer swap back to an earlier snapshot (Iceberg
-    ``rollback_to_snapshot``): the v1-compatible top-level view is
-    restored from that snapshot's log entry, the log itself is kept
-    intact, and no data files move."""
+    ``rollback_to_snapshot``): the top-level view is restored from that
+    snapshot's log entry, the log itself is kept intact, and no data
+    files move."""
     path = table_path(base_dir, name)
     man = read_manifest(base_dir, name)
     e = _snapshot_entry(man, snapshot)
@@ -297,9 +293,7 @@ def expire_snapshots(base_dir: str, name: str, keep_last: int = 2) -> list[int]:
 
     path = table_path(base_dir, name)
     man = read_manifest(base_dir, name)
-    log = man.get("snapshots", [])
-    if not log:
-        return []
+    log = man["snapshots"]
     keep_ids = {e["id"] for e in log[-keep_last:]} | {man["snapshot_id"]}
     kept = [e for e in log if e["id"] in keep_ids]
     expired = [e for e in log if e["id"] not in keep_ids]

@@ -1,37 +1,59 @@
-"""Resumable staged materialization of the KG build.
+"""Resumable staged materialization of the KG, one batch of conversations
+at a time.
 
 Implements north_rule's checkpoint/resume contract: each stage writes a
 snapshot-committed table (io.write_table: parquet + atomic manifest with
-per-partition lineage); a rerun skips every committed stage and resumes
-from the first uncommitted one, reading upstream stages from their
-snapshots instead of recomputing (the reference has no analog — a crashed
-run restarts from zero; SURVEY §4.2 item 4).
+per-partition lineage). A build is the first batch and an append is every
+later one; both commit through ``_commit_batch``, which runs the stages
+below in order and reads each stage's input as the rows its upstream
+table's current snapshot added (``io.read_added``), so the
+per-conversation stages do batch-sized work.
 
-Stage graph (each node = one committed table):
+Stage graph (each node = one committed table, with the mode a batch
+commits it in; a table's first append is a replace):
 
-    transcripts (input)
-      -> mentions            (pandas-UDF detection)
-      -> linked              (broadcast ranked linking)
-      -> alias_mapping       (alias pairs + connected components)
-      -> edges   [bucketed]  (all triple layers)
-      -> nodes   [bucketed]
-      -> canonical
-      -> _metrics            (per-pred triple counts; lineage lives in
-                              each table's manifest)
+    transcripts (batch input)
+      -> mentions            append   (pandas-UDF detection)
+      -> linked              append   (broadcast ranked linking)
+      -> alias_mapping       replace  (union-find over the committed
+                                       mapping pairs + the batch's alias pairs)
+      -> edges   [bucketed]  append   (all triple layers)
+      -> nodes   [bucketed]  append
+      -> canonical           replace  (all of linked x current mapping)
+      -> _metrics            replace  (per-pred triple counts of the graph)
+
+Canonicalization is the one cross-conversation layer: a new alias can
+merge two existing components, so ``alias_mapping`` is re-solved per
+batch (entity-vocabulary-sized), and a build is that re-solve over an
+empty previous mapping. ``same_as`` edges are materialized only in the
+first ``edges`` snapshot; ``read_graph_edges`` drops them and derives the
+current ones from ``alias_mapping``.
+
+A build resumes: a rerun skips every committed stage (the reference has
+no analog — a crashed run restarts from zero; SURVEY §4.2 item 4). An
+append is atomic: if a stage raises, every table the batch committed is
+rolled back to its pre-batch snapshot, so the batch can be retried.
 
 Determinism: all stage outputs are content-keyed and partition-invariant,
-so a resumed run's tables are row-identical to a clean run's (pytest
-kill/resume test)."""
+so a resumed run's tables are row-identical to a clean run's, and a build
+plus appends composes to the graph of one build over the whole corpus
+(pytest-gated)."""
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from jcpg_spark import caching
 from jcpg_spark import io as tio
 from jcpg_spark import metrics as tmetrics
-from jcpg_spark.operators import calls, canonicalize, linking, mentions, references, structural
+from jcpg_spark.operators import canonicalize, linking, mentions
+from jcpg_spark.pipeline import edge_layers, node_layers
+
+STAGES = ("mentions", "linked", "alias_mapping", "edges", "nodes", "canonical", "_metrics")
 
 
 @dataclass
@@ -44,202 +66,116 @@ class RunSummary:
 
 
 def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    dictionary: DataFrame,
-    out_dir: str,
-    resume: bool = True,
-    fail_after: str | None = None,
+    spark: SparkSession, transcripts: DataFrame, dictionary: DataFrame, out_dir: str
 ) -> RunSummary:
-    """Run all stages, skipping committed snapshots when ``resume``.
+    """Build the graph of ``transcripts`` as the first batch, skipping the
+    stages an earlier (crashed) run already committed."""
+    committed = {name for name in STAGES if tio.is_committed(out_dir, name)}
+    return _commit_batch(spark, transcripts, dictionary, out_dir, committed)
 
-    ``fail_after`` injects a crash after the named stage commits — used by
-    the kill/resume test to simulate a mid-job failure.
-    """
+
+def append_conversations(
+    spark: SparkSession, new_transcripts: DataFrame, dictionary: DataFrame, out_dir: str
+) -> RunSummary:
+    """Incremental ingest: commit a batch of NEW conversations onto a
+    materialized graph, row-identical to one build over the full corpus
+    (pytest-gated). Re-ingest of a materialized conv_id is refused by one
+    distinct-join on conv_id against the committed mentions table."""
+    for name in STAGES:
+        if not tio.is_committed(out_dir, name):
+            raise ValueError(
+                f"append_conversations needs a materialized pipeline (run_pipeline) "
+                f"first; stage {name!r} is not committed in {out_dir}"
+            )
+    seen = tio.read_table(spark, out_dir, "mentions").select("conv_id").distinct()
+    batch_ids = new_transcripts.select("conv_id").distinct()
+    if batch_ids.join(seen, "conv_id", "left_semi").limit(1).count():
+        raise ValueError("new_transcripts overlaps already-materialized conv_ids")
+
+    before = {name: tio.read_manifest(out_dir, name)["snapshot_id"] for name in STAGES}
+    try:
+        return _commit_batch(spark, new_transcripts, dictionary, out_dir, set())
+    except BaseException:
+        for name, snap in before.items():
+            if tio.read_manifest(out_dir, name)["snapshot_id"] != snap:
+                tio.rollback(out_dir, name, snap)
+        raise
+
+
+def _commit_batch(
+    spark: SparkSession, batch: DataFrame, dictionary: DataFrame, out_dir: str, skip: set
+) -> RunSummary:
+    """Commit ``batch`` through every stage in order; a stage in ``skip``
+    is already committed and is not recomputed."""
     summary = RunSummary(out_dir=out_dir)
 
-    def stage(name: str, compute, bucket_col: str | None = None):
-        if resume and tio.is_committed(out_dir, name):
+    def stage(name: str, compute, mode: str, bucket_col: str | None = None) -> None:
+        if name in skip:
             summary.stages_skipped.append(name)
             summary.manifests[name] = tio.read_manifest(out_dir, name)
         else:
-            import time
-
             t0 = time.time()
-            df = compute()
             summary.manifests[name] = tio.write_table(
-                df, out_dir, name, bucket_col=bucket_col
+                compute(), out_dir, name, bucket_col=bucket_col, mode=mode
             )
             summary.stage_walls[name] = round(time.time() - t0, 2)
             summary.stages_computed.append(name)
-            if fail_after == name:
-                raise RuntimeError(f"injected failure after stage {name}")
-        return tio.read_table(spark, out_dir, name)
 
+    batch = caching.swap_persist("materialize.batch", batch)
     surfaces = [r["surface"] for r in dictionary.select("surface").distinct().collect()]
-    transcripts = transcripts.persist()
 
-    m = stage(
+    stage(
         "mentions",
         lambda: mentions.detect_mentions(
-            spark, transcripts, surfaces, turn_flag_rx=canonicalize.INTRO_RX
+            spark, batch, surfaces, turn_flag_rx=canonicalize.INTRO_RX
         ),
+        "append",
     )
-    linked = stage("linked", lambda: linking.link_mentions(m, dictionary))
+    m = tio.read_added(spark, out_dir, "mentions")
+    stage("linked", lambda: linking.link_mentions(m, dictionary), "append")
+    linked = tio.read_added(spark, out_dir, "linked")
 
     def _mapping():
-        pairs = canonicalize.alias_pairs(transcripts, linked)
+        pairs = canonicalize.alias_pairs(batch, linked)
+        if tio.is_committed(out_dir, "alias_mapping"):
+            pairs = tio.read_table(spark, out_dir, "alias_mapping").select(
+                F.col("entity").alias("a"), F.col("canonical_id").alias("b")
+            ).unionByName(pairs)
         mapping, _rounds, _conv = canonicalize.connected_components(pairs)
         return mapping
 
-    mapping = stage("alias_mapping", _mapping)
+    stage("alias_mapping", _mapping, "replace")
+    mapping = tio.read_table(spark, out_dir, "alias_mapping")
 
     # edges bucketed by the entity var (falls back to src for non-entity
     # triples) — the parquet stand-in for Iceberg bucket(N, entity_hash)
     # per north_star; later entity-keyed joins co-locate. Layer lists are
-    # SHARED with build_graph (pipeline.edge_layers/node_layers) so the
-    # staged path cannot drift from the direct one.
-    from pyspark.sql import functions as F
-
-    from jcpg_spark.pipeline import edge_layers, node_layers
-
-    def _edges_bucketed():
-        return edge_layers(transcripts, m, linked, mapping).withColumn(
+    # SHARED with build_graph so the staged path cannot drift from it.
+    def _edges():
+        same_as = mapping.limit(0) if tio.is_committed(out_dir, "edges") else mapping
+        return edge_layers(batch, m, linked, same_as).withColumn(
             "_bucket_key", F.coalesce(F.col("var"), F.col("src"))
         )
 
-    edges = stage("edges", _edges_bucketed, bucket_col="_bucket_key")
-    edges = edges.drop("_bucket_key")
-
-    stage("nodes", lambda: node_layers(transcripts, m, linked), bucket_col="node_id")
-    stage("canonical", lambda: canonicalize.canonical_map(linked, mapping))
-    stage("_metrics", lambda: tmetrics.edge_metrics(edges))
-    return summary
-
-
-def append_conversations(
-    spark: SparkSession,
-    new_transcripts: DataFrame,
-    dictionary: DataFrame,
-    out_dir: str,
-    check_disjoint: bool = True,
-) -> RunSummary:
-    """Incremental ingest: extend a materialized pipeline directory with a
-    batch of NEW conversations — O(new data) work and O(new data) commits,
-    the batch sibling of the streaming layers.
-
-    Every per-conversation layer (AST/CFG/ICFG/CDG/DDG/IMPORTS) appends as
-    a snapshot (io.write_table mode="append": parent directories + one new
-    — no rewrite of existing files). The one CROSS-conversation layer,
-    entity canonicalization, cannot append: a new alias can merge two
-    PRE-EXISTING components. It is re-solved as union-find over (previous
-    mapping pairs ∪ new alias pairs) — both entity-vocabulary-sized, the
-    IncrementalCanonicalizer's argument — and the dimension tables
-    (alias_mapping, canonical, _metrics) are REPLACED, which is cheap
-    because they are vocabulary- not corpus-sized. Consequently same_as
-    edges are NOT materialized into the appended edge snapshots;
-    ``read_graph_edges`` below derives them from the current mapping on
-    read, so the composed graph is row-identical to a from-scratch
-    ``build_graph`` over the full corpus (pytest-gated).
-
-    ``check_disjoint`` guards re-ingest (a conv_id already materialized):
-    one distinct-join on conv_id against the committed mentions table —
-    at 10^12 turns disable it and enforce upstream, the standard
-    idempotence trade.
-    """
-    from pyspark.sql import functions as F
-
-    from jcpg_spark.pipeline import edge_layers, node_layers
-
-    summary = RunSummary(out_dir=out_dir)
-    for required in ("mentions", "edges", "alias_mapping"):
-        if not tio.is_committed(out_dir, required):
-            raise ValueError(
-                f"append_conversations needs a materialized pipeline (run_pipeline) "
-                f"first; stage {required!r} is not committed in {out_dir}"
-            )
-    if check_disjoint:
-        seen = tio.read_table(spark, out_dir, "mentions").select("conv_id").distinct()
-        clash = (
-            new_transcripts.select("conv_id").distinct()
-            .join(seen, "conv_id", "left_semi").limit(1).count()
-        )
-        if clash:
-            raise ValueError("new_transcripts overlaps already-materialized conv_ids")
-
-    new_transcripts = new_transcripts.persist()
-    surfaces = [r["surface"] for r in dictionary.select("surface").distinct().collect()]
-
-    def stage(name: str, compute, mode: str, bucket_col: str | None = None):
-        import time
-
-        t0 = time.time()
-        df = compute()
-        summary.manifests[name] = tio.write_table(
-            df, out_dir, name, bucket_col=bucket_col, mode=mode
-        )
-        summary.stage_walls[name] = round(time.time() - t0, 2)
-        summary.stages_computed.append(name)
-        return tio.read_table(spark, out_dir, name)
-
-    m_new = mentions.detect_mentions(
-        spark, new_transcripts, surfaces, turn_flag_rx=canonicalize.INTRO_RX
-    )
-    stage("mentions", lambda: m_new, mode="append")
-    m_new = None  # re-read below so downstream consumes the committed snapshot
-    m_committed = tio.read_table(spark, out_dir, "mentions")
-    m = m_committed.join(
-        new_transcripts.select("conv_id").distinct(), "conv_id", "left_semi"
-    )
-    linked_new = linking.link_mentions(m, dictionary)
-    stage("linked", lambda: linked_new, mode="append")
-
-    # merged canonicalization: previous component edges + new alias pairs
-    prev_pairs = tio.read_table(spark, out_dir, "alias_mapping").select(
-        F.col("entity").alias("a"), F.col("canonical_id").alias("b")
-    )
-    new_pairs = canonicalize.alias_pairs(new_transcripts, linked_new)
-    mapping, _rounds, _conv = canonicalize.connected_components(
-        prev_pairs.unionByName(new_pairs)
-    )
-    stage("alias_mapping", lambda: mapping, mode="replace")
-
-    empty_mapping = mapping.limit(0)
+    stage("edges", _edges, "append", bucket_col="_bucket_key")
+    stage("nodes", lambda: node_layers(batch, m, linked), "append", bucket_col="node_id")
     stage(
-        "edges",
-        lambda: edge_layers(new_transcripts, m, linked_new, empty_mapping).withColumn(
-            "_bucket_key", F.coalesce(F.col("var"), F.col("src"))
-        ),
-        mode="append",
-        bucket_col="_bucket_key",
+        "canonical",
+        lambda: canonicalize.canonical_map(tio.read_table(spark, out_dir, "linked"), mapping),
+        "replace",
     )
-    stage(
-        "nodes",
-        lambda: node_layers(new_transcripts, m, linked_new),
-        mode="append",
-        bucket_col="node_id",
-    )
-    linked_all = tio.read_table(spark, out_dir, "linked")
-    stage("canonical", lambda: canonicalize.canonical_map(linked_all, mapping),
-          mode="replace")
-    stage("_metrics", lambda: tmetrics.edge_metrics(read_graph_edges(spark, out_dir)),
-          mode="replace")
+    stage("_metrics", lambda: tmetrics.edge_metrics(read_graph_edges(spark, out_dir)), "replace")
     return summary
 
 
 def read_graph_edges(spark: SparkSession, out_dir: str) -> DataFrame:
     """Current graph edge view of a materialized directory: the committed
     per-conversation layers plus same_as derived from the CURRENT
-    alias_mapping. Under ``append_conversations`` the appended snapshots
-    never contain same_as rows, so deriving them here (and dropping any
-    from the initial full run) keeps the composed graph exactly equal to
-    a from-scratch build over the full corpus even after components
-    merged across appends."""
-    from pyspark.sql import functions as F
-
-    edges = tio.read_table(spark, out_dir, "edges")
-    if "_bucket_key" in edges.columns:
-        edges = edges.drop("_bucket_key")
+    alias_mapping. Only the first edges snapshot holds same_as rows, so
+    dropping them here and deriving the current ones keeps the composed
+    graph exactly equal to a from-scratch build over the full corpus even
+    after components merged across appends."""
+    edges = tio.read_table(spark, out_dir, "edges").drop("_bucket_key")
     mapping = tio.read_table(spark, out_dir, "alias_mapping")
     return edges.filter(F.col("pred") != "same_as").unionByName(
         canonicalize.same_as_triples(mapping)

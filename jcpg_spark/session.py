@@ -11,6 +11,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of the memory this process can see (physical RAM, or a
+    smaller cgroup limit), capped at 16g. In local mode the driver JVM
+    hosts every executor next to the Python workers; a fixed 16g heap on
+    a host with about that much memory lets the JVM grow until the
+    machine kills it."""
+    visible = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for limit_file in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(limit_file) as f:
+                visible = min(visible, int(f.read()))
+        except (OSError, ValueError):  # no such cgroup, or "max"
+            pass
+    return f"{min(visible // 4 >> 20, 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "jcpg_spark",
     master: str | None = None,
@@ -46,7 +65,10 @@ def get_spark(
         # are ~100 B; jobs over LARGE binary payloads (multimodal media)
         # should override this down so a batch stays executor-memory-sized.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("JCPG_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("JCPG_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # PySpark 4's DataFrame-debugging hook wraps EVERY Column/DataFrame

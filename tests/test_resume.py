@@ -26,15 +26,30 @@ def _fp(spark, base, name):
     return hashlib.sha256(json.dumps(rows, default=str).encode()).hexdigest()
 
 
-def test_kill_resume_identical_output(spark, dictionary, t_small, tmp_path):
+def _crash_after(monkeypatch, stage):
+    """Make io.write_table raise right after ``stage`` commits."""
+    write = tio.write_table
+
+    def crashing(df, base_dir, name, *a, **kw):
+        man = write(df, base_dir, name, *a, **kw)
+        if name == stage:
+            raise RuntimeError(f"injected failure after stage {name}")
+        return man
+
+    monkeypatch.setattr(tio, "write_table", crashing)
+
+
+def test_kill_resume_identical_output(spark, dictionary, t_small, tmp_path, monkeypatch):
     clean, resumed = str(tmp_path / "clean"), str(tmp_path / "resumed")
 
     s0 = run_pipeline(spark, t_small, dictionary, clean)
     assert s0.stages_computed == STAGES
 
     # crash after the 'linked' stage commits
+    _crash_after(monkeypatch, "linked")
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, t_small, dictionary, resumed, fail_after="linked")
+        run_pipeline(spark, t_small, dictionary, resumed)
+    monkeypatch.undo()
     assert tio.is_committed(resumed, "linked")
     assert not tio.is_committed(resumed, "edges")
 
@@ -245,3 +260,59 @@ def test_append_conversations_equals_full_build(spark, dictionary, tmp_path):
     # re-ingest guard: same batch again must refuse
     with _pytest.raises(ValueError, match="overlaps"):
         append_conversations(spark, t_b, dictionary, out)
+
+
+def _split(spark, n_convs, n_parts):
+    """Synthetic corpus of ``n_convs`` conversations and its ``n_parts``
+    conv_id-disjoint batches (none of them persisted)."""
+    from pyspark.sql import functions as F
+
+    t_all = synth_transcripts(spark, n_convs, skew=False)
+    convs = sorted(r["conv_id"] for r in t_all.select("conv_id").distinct().collect())
+    size = -(-len(convs) // n_parts)
+    return t_all, [
+        t_all.filter(F.col("conv_id").isin(convs[i:i + size]))
+        for i in range(0, len(convs), size)
+    ]
+
+
+def test_failed_append_rolls_back_and_retries(spark, dictionary, tmp_path, monkeypatch):
+    """An append that crashes mid-batch leaves every table at its
+    pre-batch snapshot, so retrying the same batch is accepted and yields
+    the full-corpus graph."""
+    from jcpg_spark.pipeline import build_graph
+    from jcpg_spark.plans.materialize import append_conversations, read_graph_edges
+
+    t_all, (t_a, t_b) = _split(spark, 12, 2)
+    out = str(tmp_path / "inc")
+    run_pipeline(spark, t_a, dictionary, out)
+    before = {name: tio.read_manifest(out, name)["snapshot_id"] for name in STAGES}
+
+    _crash_after(monkeypatch, "edges")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        append_conversations(spark, t_b, dictionary, out)
+    monkeypatch.undo()
+    assert {name: tio.read_manifest(out, name)["snapshot_id"] for name in STAGES} == before
+
+    append_conversations(spark, t_b, dictionary, out)
+    got = sorted(tuple(r) for r in read_graph_edges(spark, out).collect())
+    want = sorted(tuple(r) for r in build_graph(spark, t_all, dictionary).edges.collect())
+    assert got == want and want
+
+
+def test_build_and_appends_hold_one_cached_batch(spark, dictionary, tmp_path):
+    """A build plus three appends keep at most one input batch cached."""
+    from jcpg_spark.plans.materialize import append_conversations
+
+    _, batches = _split(spark, 16, 4)
+    out = str(tmp_path / "inc")
+
+    def cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    base = cached()
+    sizes = []
+    for i, batch in enumerate(batches):
+        (append_conversations if i else run_pipeline)(spark, batch, dictionary, out)
+        sizes.append(cached() - base)
+    assert max(sizes) <= 1, sizes
