@@ -3,15 +3,17 @@
 north_rule requires every stage to checkpoint per-partition lineage +
 triple-count metrics and the pipeline to resume from the last committed
 snapshot. The production target is Iceberg (atomic snapshot commits,
-bucket partitioning); the Iceberg runtime jar is not in this sandbox image,
-so this module provides the same contract over plain parquet:
+bucket partitioning); the Iceberg runtime jar is not a dependency here,
+so this module provides the snapshot contract over plain parquet, without
+bucketing (``spark.read.parquet`` has no bucket spec a join could use).
 
 - ``write_table`` writes parquet under a per-snapshot directory then
   atomically commits the pointer manifest (write temp + rename) recording
-  row count, schema, per-partition lineage (partition id -> rows), and
-  the full snapshot log — the bookkeeping an Iceberg snapshot + manifest
-  list carries. ``mode="append"`` commits an O(new-data) append snapshot
-  (parent directories + one new), no rewrite.
+  row count, schema, per-partition lineage (partition id -> rows, read
+  from the written files' footers), and the full snapshot log — the
+  bookkeeping an Iceberg snapshot + manifest list carries.
+  ``mode="append"`` commits an O(new-data) append snapshot (parent
+  directories + one new), no rewrite.
 - ``read_table(snapshot=...)`` time-travels to any logged snapshot
   (``VERSION AS OF``); ``read_added`` reads only the rows the current
   snapshot added (the incremental append scan); ``rollback`` is an
@@ -35,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
-NUM_BUCKETS = 32  # output files of a bucketed write
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -129,13 +130,23 @@ def _commit_pointer(path: str, manifest: dict) -> None:
     os.rename(tmp, os.path.join(path, MANIFEST))  # atomic commit
 
 
-def write_table(
-    df: DataFrame,
-    base_dir: str,
-    name: str,
-    bucket_col: str | None = None,
-    mode: str = "replace",
-) -> dict:
+def _footer_lineage(snap_path: str) -> dict:
+    """partition id (the ``part-<NNNNN>-`` file prefix) -> rows, summed
+    from the footers of the files under ``snap_path``; no Spark job.
+    Zero-row files (an empty write's schema-only file) are skipped."""
+    import pyarrow.parquet as pq
+
+    lineage: dict[str, int] = {}
+    for f in sorted(os.listdir(snap_path)):
+        if f.startswith("part-") and f.endswith(".parquet"):
+            rows = pq.read_metadata(os.path.join(snap_path, f)).num_rows
+            if rows:
+                pid = str(int(f.split("-")[1]))
+                lineage[pid] = lineage.get(pid, 0) + rows
+    return lineage
+
+
+def write_table(df: DataFrame, base_dir: str, name: str, mode: str = "replace") -> dict:
     """Write ``df`` as a committed table SNAPSHOT; returns the manifest.
 
     Iceberg-style multi-snapshot commits (format_version 2): each write
@@ -148,12 +159,8 @@ def write_table(
     directories plus the new one — an O(new data) fast append, no
     rewrite of existing files, exactly Iceberg's append snapshot. The
     pointer keeps the full snapshot log, so ``read_table(snapshot=...)``
-    time-travels and ``rollback`` is a pointer swap.
-
-    ``bucket_col`` hash-distributes output into ``NUM_BUCKETS`` files by
-    the column (the stand-in for Iceberg ``bucket(N, col)`` partitioning —
-    co-locates later equi-joins on that column and bounds file sizes
-    under skew).
+    time-travels and ``rollback`` is a pointer swap. ``df`` is written
+    as given: no repartition, no added column.
 
     Manifest content stays deterministic (no timestamps): snapshot ids
     are a monotone counter, lineage is partition id -> rows of the data
@@ -174,17 +181,8 @@ def write_table(
     snap_id = max(e["id"] for e in prev["snapshots"]) + 1 if prev else 1
     snap_dir = f"snap-{snap_id}"
 
-    out = df
-    if bucket_col is not None:
-        out = df.repartition(NUM_BUCKETS, F.col(bucket_col))
-    # per-partition lineage computed on the same data that is written
-    out = out.withColumn("_pid", F.spark_partition_id())
-    out.write.mode("overwrite").parquet(os.path.join(path, snap_dir))
-
-    spark = df.sparkSession
-    written = spark.read.parquet(os.path.join(path, snap_dir))
-    lineage_rows = written.groupBy("_pid").count().collect()
-    lineage = {str(r["_pid"]): r["count"] for r in lineage_rows}
+    df.write.mode("overwrite").parquet(os.path.join(path, snap_dir))
+    lineage = _footer_lineage(os.path.join(path, snap_dir))
     new_rows = sum(lineage.values())
     if mode == "append":
         data_dirs = prev["data_dirs"] + [snap_dir]
@@ -201,8 +199,6 @@ def write_table(
         "lineage": lineage,
         "data_dirs": data_dirs,
         "schema": [f.name for f in df.schema.fields],
-        "bucket_col": bucket_col,
-        "num_buckets": NUM_BUCKETS if bucket_col else None,
     }
     log = (prev["snapshots"] if prev else []) + [entry]
     manifest = {
@@ -212,8 +208,6 @@ def write_table(
         "partitions": len(lineage),
         "lineage": lineage,
         "schema": entry["schema"],
-        "bucket_col": bucket_col,
-        "num_buckets": NUM_BUCKETS if bucket_col else None,
         "format_version": 2,
         "snapshot_id": snap_id,
         "data_dirs": data_dirs,
@@ -249,7 +243,7 @@ def read_added(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
 
 def _read_dirs(spark: SparkSession, base_dir: str, name: str, dirs: list[str]) -> DataFrame:
     path = table_path(base_dir, name)
-    return spark.read.parquet(*[os.path.join(path, d) for d in dirs]).drop("_pid")
+    return spark.read.parquet(*[os.path.join(path, d) for d in dirs])
 
 
 def read_manifest(base_dir: str, name: str) -> dict:
@@ -276,9 +270,7 @@ def rollback(base_dir: str, name: str, snapshot: int) -> dict:
     e = _snapshot_entry(man, snapshot)
     man.update(
         rows=e["rows"], partitions=e["partitions"], lineage=e["lineage"],
-        schema=e["schema"], bucket_col=e["bucket_col"],
-        num_buckets=e["num_buckets"], snapshot_id=e["id"],
-        data_dirs=e["data_dirs"],
+        schema=e["schema"], snapshot_id=e["id"], data_dirs=e["data_dirs"],
     )
     _commit_pointer(path, man)
     return man

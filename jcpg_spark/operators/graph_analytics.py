@@ -1526,8 +1526,7 @@ def cardinality_audit(edges: DataFrame) -> DataFrame:
     functional under duplicate emission of the same triple. Two hash
     aggregations, both with map-side partial combine; the second groups on
     the predicate vocabulary (tiny), so the only data-scale shuffle is the
-    (pred, src) agg — same key family the edge tables are already bucketed
-    by at rest. No window, no join: safe at 10^12 edges.
+    (pred, src) agg. No window, no join: safe at 10^12 edges.
     """
     per_subj = edges.groupBy("pred", "src").agg(
         F.count("*").alias("n"), F.countDistinct("dst").alias("fanout")
@@ -1558,9 +1557,8 @@ def resolve_functional(edges: DataFrame) -> DataFrame:
     Plan: one (src, pred, dst) hash aggregation (map-side partial combine)
     collapses duplicate emissions, then one (src, pred) aggregation picks
     the winner via ``min_by`` over the (-support, dst) total-order key —
-    sort-free argmax, no window, no join. Both shuffles key on the same
-    subject-hash family the edge tables are bucketed by at rest; safe at
-    10^12 observations.
+    sort-free argmax, no window, no join. Both shuffles key on the
+    subject; safe at 10^12 observations.
     """
     obs = edges.groupBy("src", "pred", "dst").agg(F.count("*").alias("support"))
     winner = obs.groupBy("src", "pred").agg(
@@ -1704,9 +1702,8 @@ def schema_graph(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 
     Endpoints missing from ``nodes`` report kind '?' rather than dropping
     the edge — dangling references are exactly what the census must
-    surface. Two edge-scale equi-joins on node_id (the id-hash key family
-    the tables are bucketed by) + one hash-agg on the tiny (kind, pred,
-    kind) vocabulary.
+    surface. Two edge-scale equi-joins on node_id + one hash-agg on the
+    tiny (kind, pred, kind) vocabulary.
     """
     kinds = nodes.select("node_id", "kind")
     return (

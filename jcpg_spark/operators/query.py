@@ -380,8 +380,9 @@ def match_pattern(
             gvar = graph
         else:
             # constant GRAPH: scope the whole group to one named graph —
-            # a plain pushed filter, the partition-pruning move when the
-            # edges table is partitioned/bucketed by the graph column
+            # a plain pushed filter (the stored tables are not partitioned
+            # by the graph column, so it prunes only by parquet row-group
+            # statistics)
             edges = edges.where(F.col(graph_col) == F.lit(graph))
     result: DataFrame | None = None
     bound: set[str] = set()

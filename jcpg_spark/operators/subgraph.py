@@ -121,10 +121,9 @@ def graph_diff(
     deletion audits (e.g. a right-to-be-forgotten purge: rebuild over the
     reduced corpus, diff against the last published snapshot, ship only
     the delta to downstream consumers). Two left-anti joins on the edge
-    key — each one shuffle on data that at 100 TB is bucketed by the same
-    key the snapshots are stored under, so a bucketed table layout makes
-    both sides co-located; nothing is collected and no side is assumed
-    small. Rows are deduplicated on the key (a diff is a SET delta; a
+    key — each one shuffle of both sides (the stored snapshots carry no
+    bucket layout to co-locate them); nothing is collected and no side is
+    assumed small. Rows are deduplicated on the key (a diff is a SET delta; a
     weight column included in ``keys`` turns a weight change into a
     removed+added pair).
     """

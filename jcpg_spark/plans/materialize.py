@@ -17,8 +17,8 @@ commits it in; a table's first append is a replace):
       -> linked              append   (broadcast ranked linking)
       -> alias_mapping       replace  (union-find over the committed
                                        mapping pairs + the batch's alias pairs)
-      -> edges   [bucketed]  append   (all triple layers)
-      -> nodes   [bucketed]  append
+      -> edges               append   (all triple layers)
+      -> nodes               append
       -> canonical           replace  (all of linked x current mapping)
       -> _metrics            replace  (per-pred triple counts of the graph)
 
@@ -32,7 +32,8 @@ current ones from ``alias_mapping``.
 A build resumes: a rerun skips every committed stage (the reference has
 no analog — a crashed run restarts from zero; SURVEY §4.2 item 4). An
 append is atomic: if a stage raises, every table the batch committed is
-rolled back to its pre-batch snapshot, so the batch can be retried.
+rolled back to its pre-batch snapshot, so the batch can be retried. A
+committed append expires all but each table's last two snapshots.
 
 Determinism: all stage outputs are content-keyed and partition-invariant,
 so a resumed run's tables are row-identical to a clean run's, and a build
@@ -94,12 +95,15 @@ def append_conversations(
 
     before = {name: tio.read_manifest(out_dir, name)["snapshot_id"] for name in STAGES}
     try:
-        return _commit_batch(spark, new_transcripts, dictionary, out_dir, set())
+        summary = _commit_batch(spark, new_transcripts, dictionary, out_dir, set())
     except BaseException:
         for name, snap in before.items():
             if tio.read_manifest(out_dir, name)["snapshot_id"] != snap:
                 tio.rollback(out_dir, name, snap)
         raise
+    for name in STAGES:
+        tio.expire_snapshots(out_dir, name)
+    return summary
 
 
 def _commit_batch(
@@ -109,15 +113,13 @@ def _commit_batch(
     is already committed and is not recomputed."""
     summary = RunSummary(out_dir=out_dir)
 
-    def stage(name: str, compute, mode: str, bucket_col: str | None = None) -> None:
+    def stage(name: str, compute, mode: str) -> None:
         if name in skip:
             summary.stages_skipped.append(name)
             summary.manifests[name] = tio.read_manifest(out_dir, name)
         else:
             t0 = time.time()
-            summary.manifests[name] = tio.write_table(
-                compute(), out_dir, name, bucket_col=bucket_col, mode=mode
-            )
+            summary.manifests[name] = tio.write_table(compute(), out_dir, name, mode=mode)
             summary.stage_walls[name] = round(time.time() - t0, 2)
             summary.stages_computed.append(name)
 
@@ -147,18 +149,14 @@ def _commit_batch(
     stage("alias_mapping", _mapping, "replace")
     mapping = tio.read_table(spark, out_dir, "alias_mapping")
 
-    # edges bucketed by the entity var (falls back to src for non-entity
-    # triples) — the parquet stand-in for Iceberg bucket(N, entity_hash)
-    # per north_star; later entity-keyed joins co-locate. Layer lists are
-    # SHARED with build_graph so the staged path cannot drift from it.
+    # layer lists are SHARED with build_graph so the staged path cannot
+    # drift from it
     def _edges():
         same_as = mapping.limit(0) if tio.is_committed(out_dir, "edges") else mapping
-        return edge_layers(batch, m, linked, same_as).withColumn(
-            "_bucket_key", F.coalesce(F.col("var"), F.col("src"))
-        )
+        return edge_layers(batch, m, linked, same_as)
 
-    stage("edges", _edges, "append", bucket_col="_bucket_key")
-    stage("nodes", lambda: node_layers(batch, m, linked), "append", bucket_col="node_id")
+    stage("edges", _edges, "append")
+    stage("nodes", lambda: node_layers(batch, m, linked), "append")
     stage(
         "canonical",
         lambda: canonicalize.canonical_map(tio.read_table(spark, out_dir, "linked"), mapping),
@@ -175,7 +173,7 @@ def read_graph_edges(spark: SparkSession, out_dir: str) -> DataFrame:
     dropping them here and deriving the current ones keeps the composed
     graph exactly equal to a from-scratch build over the full corpus even
     after components merged across appends."""
-    edges = tio.read_table(spark, out_dir, "edges").drop("_bucket_key")
+    edges = tio.read_table(spark, out_dir, "edges")
     mapping = tio.read_table(spark, out_dir, "alias_mapping")
     return edges.filter(F.col("pred") != "same_as").unionByName(
         canonicalize.same_as_triples(mapping)

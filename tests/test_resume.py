@@ -72,12 +72,17 @@ def test_rerun_is_noop(spark, dictionary, t_small, tmp_path):
 
 
 def test_manifest_lineage(spark, dictionary, t_small, tmp_path):
+    from jcpg_spark.pipeline import build_graph
+
     base = str(tmp_path / "t")
     s = run_pipeline(spark, t_small, dictionary, base)
     man = s.manifests["edges"]
     assert man["rows"] == sum(man["lineage"].values())
     assert man["rows"] == tio.read_table(spark, base, "edges").count()
-    assert man["bucket_col"] == "_bucket_key"
+    # a stored table holds only the stage's columns: no layout helpers
+    cols = {name: tio.read_table(spark, base, name).columns for name in STAGES}
+    assert not [n for n, c in cols.items() if {"_pid", "_bucket_key"} & set(c)], cols
+    assert cols["edges"] == build_graph(spark, t_small, dictionary).edges.columns
     # metrics table total matches the edges manifest
     metrics = {r["pred"]: r["n_triples"] for r in tio.read_table(spark, base, "_metrics").collect()}
     assert metrics["__total__"] == man["rows"]
@@ -90,10 +95,7 @@ def test_materialized_edges_match_build_graph(spark, dictionary, t_small, tmp_pa
 
     base = str(tmp_path / "t")
     run_pipeline(spark, t_small, dictionary, base)
-    mat = {
-        tuple(r)
-        for r in tio.read_table(spark, base, "edges").drop("_bucket_key").collect()
-    }
+    mat = {tuple(r) for r in tio.read_table(spark, base, "edges").collect()}
     direct = {tuple(r) for r in build_graph(spark, t_small, dictionary).edges.collect()}
     assert mat == direct
 
@@ -195,6 +197,26 @@ def test_snapshot_append_time_travel_rollback_expire(spark, tmp_path):
     gone = [d for d in ("snap-1", "snap-2", "snap-3") if os.path.exists(os.path.join(path, d))]
     assert gone == [], gone
     assert os.path.exists(os.path.join(path, "snap-4"))
+
+    # footer lineage: a partition written as several files is one lineage
+    # key whose rows are the files' sum
+    conf = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        df5 = spark.range(6).repartition(2)  # round-robin: 3 rows each
+        m5 = tio.write_table(df5, base, "t")
+    finally:
+        spark.conf.set(conf, old)
+    files = [f for f in os.listdir(os.path.join(path, "snap-5")) if f.endswith(".parquet")]
+    assert len(files) == 6 and m5["partitions"] == 2, (files, m5["lineage"])
+    assert sum(m5["lineage"].values()) == m5["rows"] == 6
+    assert tio.read_table(spark, base, "t").count() == 6
+
+    # an empty write commits zero rows and zero partitions
+    m6 = tio.write_table(df5.limit(0), base, "t")
+    assert (m6["rows"], m6["partitions"], m6["lineage"]) == (0, 0, {})
+    assert ids() == []
 
 
 def test_snapshot_reader_isolation_during_overwrite(spark, tmp_path):
@@ -301,10 +323,15 @@ def test_failed_append_rolls_back_and_retries(spark, dictionary, tmp_path, monke
 
 
 def test_build_and_appends_hold_one_cached_batch(spark, dictionary, tmp_path):
-    """A build plus three appends keep at most one input batch cached."""
-    from jcpg_spark.plans.materialize import append_conversations
+    """A build plus three appends keep at most one input batch cached,
+    expire superseded snapshots down to two per table, and compose to the
+    full-corpus graph."""
+    import os
 
-    _, batches = _split(spark, 16, 4)
+    from jcpg_spark.pipeline import build_graph
+    from jcpg_spark.plans.materialize import append_conversations, read_graph_edges
+
+    t_all, batches = _split(spark, 16, 4)
     out = str(tmp_path / "inc")
 
     def cached():
@@ -316,3 +343,10 @@ def test_build_and_appends_hold_one_cached_batch(spark, dictionary, tmp_path):
         (append_conversations if i else run_pipeline)(spark, batch, dictionary, out)
         sizes.append(cached() - base)
     assert max(sizes) <= 1, sizes
+
+    for name in ("canonical", "alias_mapping", "_metrics"):
+        snaps = [d for d in os.listdir(tio.table_path(out, name)) if d.startswith("snap-")]
+        assert sorted(snaps) == ["snap-3", "snap-4"], (name, snaps)
+    got = sorted(tuple(r) for r in read_graph_edges(spark, out).collect())
+    want = sorted(tuple(r) for r in build_graph(spark, t_all, dictionary).edges.collect())
+    assert got == want and want
