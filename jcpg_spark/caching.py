@@ -13,12 +13,22 @@ all (long sessions, tests).
 A frame from an earlier call that is unpersisted while a lazy result still
 references it silently falls back to recompute — correctness is never
 affected, only that stale result's speed.
+
+``driver_probe`` is the probe of the scale-adaptive operators (union-find
+in ``canonicalize.connected_components``, the ``p+`` closure and DESCRIBE
+in ``operators.query``): one job decides whether a relation fits the
+driver, and when it does not, the relation stays persisted in the call
+site's slot so the distributed fallback reuses what the probe computed.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+log = logging.getLogger(__name__)
 
 _live: dict[str, DataFrame] = {}
 
@@ -42,3 +52,43 @@ def clear_caches() -> None:
             _live.pop(key).unpersist()
         except Exception:
             pass
+
+
+def release(key: str) -> None:
+    prev = _live.pop(key, None)
+    if prev is not None:
+        prev.unpersist()
+
+
+def row_bytes(rows: list) -> float:
+    """Estimated driver bytes per collected row: the ``str`` width of
+    every field over the first 10 000 rows, plus 48 bytes of per-row
+    overhead."""
+    sample = rows[:10_000]
+    if not sample:
+        return 0.0
+    return sum(len(str(v)) for r in sample for v in r) / len(sample) + 48
+
+
+def driver_probe(key: str, df: DataFrame, max_rows: int, max_bytes: int) -> list | None:
+    """ONE job collecting at most ``max_rows + 1`` rows of ``df``. Returns
+    them when they are at most ``max_rows`` and their ``row_bytes``
+    estimate is at most ``max_bytes`` (wide keys fill the heap long before
+    the row cap). Otherwise returns None and leaves ``df`` persisted in
+    ``key``'s slot, so the caller's distributed path reads the partitions
+    the probe already computed. A ``df`` its caller had cached is neither
+    persisted nor released here."""
+    lvl = df.storageLevel
+    owned = not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap)
+    if owned:
+        swap_persist(key, df)
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) <= max_rows:
+        est = row_bytes(rows) * len(rows)
+        if est <= max_bytes:
+            if owned:
+                release(key)
+            return rows
+        log.info("%s: %d rows ~%.0f MiB exceed the driver byte budget; "
+                 "running the distributed path", key, len(rows), est / 2**20)
+    return None

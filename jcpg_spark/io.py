@@ -115,6 +115,20 @@ def compaction_plan(
     )
 
 
+def local_frame(spark: SparkSession, columns: list, schema) -> DataFrame:
+    """Driver-held column lists -> a DataFrame of ``schema`` (a
+    ``StructType``; nullability kept), shipped as one Arrow table rather
+    than as pickled rows through ``parallelize``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    ))
+
+
 def table_path(base_dir: str, name: str) -> str:
     return os.path.join(base_dir, name)
 
@@ -174,11 +188,10 @@ def write_table(df: DataFrame, base_dir: str, name: str, mode: str = "replace") 
         prev = read_manifest(base_dir, name)
     if mode == "append" and prev is None:
         mode = "replace"  # first commit of a table is always a replace
-    # allocate past the LOG maximum, not current+1: after a rollback the
-    # current pointer sits below later logged snapshots, and current+1
-    # would collide with (and overwrite the data directory of) a live
-    # logged snapshot
-    snap_id = max(e["id"] for e in prev["snapshots"]) + 1 if prev else 1
+    # allocate past the highest id ever allocated, not current+1 nor the log
+    # maximum: after a rollback the current pointer sits below later
+    # snapshots, and an expired snapshot's id must not come back either
+    snap_id = _last_id(prev) + 1 if prev else 1
     snap_dir = f"snap-{snap_id}"
 
     df.write.mode("overwrite").parquet(os.path.join(path, snap_dir))
@@ -210,11 +223,18 @@ def write_table(df: DataFrame, base_dir: str, name: str, mode: str = "replace") 
         "schema": entry["schema"],
         "format_version": 2,
         "snapshot_id": snap_id,
+        "last_id": snap_id,
         "data_dirs": data_dirs,
         "snapshots": log,
     }
     _commit_pointer(path, manifest)
     return manifest
+
+
+def _last_id(manifest: dict) -> int:
+    """Highest snapshot id allocated for the table; a manifest written before
+    ``last_id`` was recorded falls back to its log maximum."""
+    return manifest.get("last_id", max(e["id"] for e in manifest["snapshots"]))
 
 
 def _snapshot_entry(manifest: dict, snapshot: int) -> dict:
@@ -277,20 +297,29 @@ def rollback(base_dir: str, name: str, snapshot: int) -> dict:
 
 
 def expire_snapshots(base_dir: str, name: str, keep_last: int = 2) -> list[int]:
-    """Drop all but the last ``keep_last`` snapshots (plus whatever the
-    CURRENT pointer references, which is never expired) and delete data
-    directories no surviving snapshot references — Iceberg
-    ``expire_snapshots`` table maintenance. Returns the expired ids."""
+    """Keep the CURRENT snapshot and its ``keep_last - 1`` nearest
+    ancestors along ``parent``; expire every other log entry and delete
+    the data directories no kept entry references — Iceberg
+    ``expire_snapshots`` table maintenance. Ancestry, not log position,
+    decides: after a rollback the entries logged past the current pointer
+    (a rolled-back batch) are not ancestors, so they go first. Returns
+    the expired ids."""
     import shutil
 
     path = table_path(base_dir, name)
     man = read_manifest(base_dir, name)
     log = man["snapshots"]
-    keep_ids = {e["id"] for e in log[-keep_last:]} | {man["snapshot_id"]}
+    by_id = {e["id"]: e for e in log}
+    keep_ids = {man["snapshot_id"]}
+    parent = by_id[man["snapshot_id"]]["parent"]
+    while parent in by_id and len(keep_ids) < keep_last:
+        keep_ids.add(parent)
+        parent = by_id[parent]["parent"]
     kept = [e for e in log if e["id"] in keep_ids]
     expired = [e for e in log if e["id"] not in keep_ids]
     live_dirs = {d for e in kept for d in e["data_dirs"]}
     dead_dirs = {d for e in expired for d in e["data_dirs"]} - live_dirs
+    man["last_id"] = _last_id(man)
     man["snapshots"] = kept
     _commit_pointer(path, man)  # commit the pruned log BEFORE deleting data
     for d in sorted(dead_dirs):

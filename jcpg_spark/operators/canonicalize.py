@@ -30,7 +30,9 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jcpg_spark import io as tio
 from jcpg_spark import schema as S
+from jcpg_spark.caching import driver_probe, release
 
 log = logging.getLogger(__name__)
 
@@ -55,15 +57,14 @@ def _driver_union_find_rows(rows, pairs: DataFrame) -> DataFrame:
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    out = [(e, find(e)) for e in parent]
-    spark = pairs.sparkSession
+    entities = list(parent)
     a_type = pairs.schema[0].dataType
     from pyspark.sql import types as T
 
     schema = T.StructType(
         [T.StructField("entity", a_type, False), T.StructField("canonical_id", a_type, False)]
     )
-    return spark.createDataFrame(out, schema=schema)
+    return tio.local_frame(pairs.sparkSession, [entities, [find(e) for e in entities]], schema)
 
 
 INTRO_RX = r"^introducing\b"
@@ -173,29 +174,18 @@ def connected_components(
     large-star/small-star alternation runs: O(log diameter) rounds, each
     round two groupBy+join passes, lineage truncated per round.
     """
-    # single probing job: fetch threshold+1 rows; if the graph is small we
-    # already hold it (no separate count + re-collect round trips)
-    probe = pairs.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
-        sample = probe[:10_000]
-        est_row = (
-            sum(len(str(r[0])) + len(str(r[1])) for r in sample) / len(sample) + 48
-            if sample
-            else 0
-        )
-        if est_row * len(probe) <= driver_threshold_bytes:
-            mapping = _driver_union_find_rows(probe, pairs)
-            return mapping, 1, True
-        log.info(
-            "connected_components: %d rows ~%.0f MiB exceeds driver byte budget; "
-            "running distributed star alternation",
-            len(probe),
-            est_row * len(probe) / 2**20,
-        )
+    probe = driver_probe(
+        "canonicalize.cc.pairs", pairs, driver_threshold, driver_threshold_bytes
+    )
+    if probe is not None:
+        return _driver_union_find_rows(probe, pairs), 1, True
 
+    # the eager checkpoint reads the probe's persisted partitions; past it
+    # the cache is dead weight
     edges = (
         pairs.select("a", "b").filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
     )
+    release("canonicalize.cc.pairs")
     # entities present in the input (roots must also appear in the output
     # mapping even after star contraction drops their edges)
     all_nodes = (

@@ -379,8 +379,9 @@ def scc(edges: DataFrame, max_hops: int = 8) -> DataFrame:
     (reference emits the loop structure via its CFG back-edges,
     ``JavacpgCFGBuilder``-family), so a component is a call-to-return
     span — bounded, conversation-local. That regime picks the
-    algorithm: ONE hop-bounded directed closure (frontier expansion,
-    each pair crosses the shuffle once — ``query._closure``), a semi
+    algorithm: ONE hop-bounded directed closure (``query._closure``: a
+    driver BFS below its row budget, else frontier expansion where each
+    pair crosses the shuffle once), a semi
     join of the pair set against its own transpose for mutuality, a min
     aggregation, a size rollup. Node ids are conv-prefixed, so closure
     pairs never cross conversations and the pair count is O(span^2) per

@@ -39,12 +39,17 @@ then ``/``, then the unary forms — so ``a|b/c`` is a | (b/c):
   away — bag semantics, multiplicity = number of mid paths);
 - ``^p``      inverse      -> the same scan with src/dst swapped;
 - ``p+``      one-or-more  -> the hop-bounded transitive closure of ``p``
-  (DISTINCT (src, dst) pairs — SPARQL closures are set-semantics —
-  computed by frontier expansion: per round, join the newly-reached pairs
-  to the base relation and anti-join the already-reached set, so a pair
-  crosses the shuffle once; rounds are bounded by ``max_hops``, which
-  keeps the unrolled plan finite and SQL-mirrorable, and caps the blow-up
-  a cyclic 10^12-edge graph would otherwise feed an unbounded ``+``);
+  (DISTINCT (src, dst) pairs — SPARQL closures are set-semantics), bounded
+  by ``max_hops``, which keeps the unrolled plan finite and SQL-mirrorable
+  and caps the blow-up a cyclic 10^12-edge graph would otherwise feed an
+  unbounded ``+``. Scale-adaptive like ``canonicalize.connected_components``:
+  one probe collects the distinct 1-hop relation when it holds at most
+  20 000 pairs, and the closure is then a per-source BFS on the driver
+  (one level per hop) handed back to Spark as one Arrow table. A larger
+  relation, or a closure over 20 000 x ``max_hops`` pairs, runs frontier
+  expansion instead: per round, join the newly-reached pairs to the base
+  relation and anti-join the already-reached set, so a pair crosses the
+  shuffle once;
 - ``p?`` / ``p*`` zero-or-one / zero-or-more -> the above unioned with
   the zero-length path = identity over every term occurring in the
   graph (one distinct over the endpoint columns), set semantics.
@@ -71,7 +76,8 @@ relation, i.e. rule-based derivation of new graph layers from matched
 patterns, the KG-construction move itself; ``ask`` and ``describe``
 complete the four SPARQL query forms (ASK as a LIMIT-1 existence probe
 that short-circuits the scan; DESCRIBE as symmetric-CBD incident-edge
-extraction via two semi joins).
+extraction: one filtered scan against a collected resource list of at
+most 50 resources, two semi joins otherwise).
 """
 
 from __future__ import annotations
@@ -80,6 +86,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from jcpg_spark.caching import driver_probe, row_bytes
 
 TriplePattern = Sequence[str]  # (subject, predicate, object), '?'-prefixed = var
 
@@ -91,6 +99,63 @@ def _is_var(term: str) -> bool:
 _PATH_META = "^+*?/|"
 _GCOL = "__g"  # internal column threading a variable GRAPH binding
 
+# Driver fast-path budgets, set at the crossovers tools/query_budget_crossover.py
+# measured (4-core host, parquet input, max_hops 4). Closure: distinct base
+# pairs collected; the BFS gives up past _CLOSURE_DRIVER_ROWS * max_hops
+# closure pairs (a chain's closure of a budget-sized base). The driver BFS
+# won to 15 000 base pairs (0.59 s vs 0.70 s), tied at 20 000 and lost from
+# 30 000 (1.03 s vs 0.96 s; 4.2 s vs 2.1 s at 100 000). DESCRIBE: resources
+# inlined as a literal IN list, which costs about 1 ms a literal to build
+# and optimize; the filtered scan tied the semi joins to about 50 resources
+# and lost from 100 (1.31 s vs 0.29 s at 1 000). Bytes: connected_components'
+# default driver_threshold_bytes, estimated by caching.row_bytes.
+_CLOSURE_DRIVER_ROWS = 20_000
+_DESCRIBE_DRIVER_ROWS = 50
+_DRIVER_BYTES = 256 << 20
+
+
+def _driver_closure(rows: list, max_hops: int, graphed: bool, max_rows: int) -> list | None:
+    """The frontier expansion of ``_frontier_closure`` over collected
+    distinct base rows, as one BFS per source (one level per hop) ->
+    column lists [src, dst(, __g)], or None once the closure outgrows
+    ``max_rows``.
+
+    It reproduces the distributed rounds row for row, SQL nulls included:
+    a null mid node (or, under GRAPH, a null graph) never joins a hop; a
+    null source is carried like any other; a level keeps only pairs the
+    anti-join would keep — every pair with a null key, else the pairs not
+    reached before. Under GRAPH the graph is part of the node key, so a
+    path never crosses graphs."""
+    starts: dict = {}
+    adj: dict = {}
+    for r in rows:
+        s, d = r["src"], r["dst"]
+        g = r[_GCOL] if graphed else None
+        starts.setdefault((s, g), []).append(d)
+        if s is not None and (g is not None or not graphed):
+            adj.setdefault((s, g), []).append(d)
+    src, dst, gra = [], [], []
+    for (s, g), level in starts.items():
+        joins = g is not None or not graphed
+        matchable = s is not None and joins
+        seen = set(level)
+        for hop in range(1, max_hops + 1):
+            if hop > 1:
+                nxt = {d2 for d in level if d is not None for d2 in adj.get((d, g), ())}
+                if matchable:
+                    nxt = {d for d in nxt if d is None or d not in seen}
+                    seen |= nxt
+                level = list(nxt)
+            src.extend([s] * len(level))
+            dst.extend(level)
+            if graphed:
+                gra.extend([g] * len(level))
+            if len(src) > max_rows:
+                return None
+            if not (level and joins):
+                break
+    return [src, dst, gra] if graphed else [src, dst]
+
 
 def _closure(base: DataFrame, max_hops: int) -> DataFrame:
     """Hop-bounded transitive closure of a 1-hop (src, dst) relation:
@@ -100,26 +165,52 @@ def _closure(base: DataFrame, max_hops: int) -> DataFrame:
     the pair count O(V * max_hops) on chain graphs instead of
     path-count exponential on diamonds.
 
-    Frontier expansion (the bfs_distances move, on pairs): each round
-    joins only the PREVIOUS round's new pairs against the 1-hop base and
-    anti-joins everything already reached, so a pair crosses the shuffle
-    in exactly one round; lineage is cut per round with a lazy
-    localCheckpoint. Bounded rounds keep the plan finite for the SQL
-    oracle and bound the damage of a cycle at 10^12 edges.
+    Scale-adaptive, like ``canonicalize.connected_components``: for
+    ``max_hops`` > 1, ``caching.driver_probe`` collects the distinct base
+    in one job when it holds at most ``_CLOSURE_DRIVER_ROWS`` pairs of at
+    most ``_DRIVER_BYTES``. ``_driver_closure`` then expands it in driver
+    memory, and the result goes back to Spark as one Arrow table of
+    ``base``'s schema (no per-hop job, no shuffle). A base over budget
+    runs ``_frontier_closure`` on the base the probe left persisted; a
+    closure over ``_CLOSURE_DRIVER_ROWS * max_hops`` pairs (or over the
+    bytes the base left) runs it on the collected base, shipped back as
+    an Arrow table. Either way the base is computed once.
 
     Under a variable GRAPH clause the base carries the named-graph column
-    ``__g`` and every hop join adds graph equality, so a path never
+    ``__g`` and every hop joins on graph equality too, so a path never
     crosses graphs — the per-graph closure the SPARQL dataset semantics
-    require."""
+    require. Both paths return the same rows."""
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    from jcpg_spark.caching import swap_persist
+    from jcpg_spark import io as tio
 
     graphed = _GCOL in base.columns
     keys = ["src", "dst"] + ([_GCOL] if graphed else [])
     base = base.distinct()
-    if max_hops > 1:
-        base = swap_persist("query.closure.base", base)
+    if max_hops == 1:
+        return base
+    probe = driver_probe("query.closure.base", base, _CLOSURE_DRIVER_ROWS, _DRIVER_BYTES)
+    if probe is not None:
+        spark, schema = base.sparkSession, base.schema
+        room = int(_DRIVER_BYTES / max(row_bytes(probe), 1.0)) - len(probe)
+        cap = min(_CLOSURE_DRIVER_ROWS * max_hops, room)
+        cols = _driver_closure(probe, max_hops, graphed, cap)
+        if cols is not None:
+            return tio.local_frame(spark, cols, schema)
+        # the closure outgrew the driver, but the base it expands is held
+        base = tio.local_frame(spark, [list(c) for c in zip(*probe)], schema)
+    return _frontier_closure(base, max_hops, keys)
+
+
+def _frontier_closure(base: DataFrame, max_hops: int, keys: list) -> DataFrame:
+    """The distributed path of ``_closure`` over its distinct base (held by
+    the probe's persist or by the collected rows): frontier expansion (the
+    bfs_distances move, on pairs). Each round joins only the PREVIOUS
+    round's new pairs against the 1-hop base and anti-joins everything
+    already reached, so a pair crosses the shuffle in exactly one round; lineage is cut per round with a lazy
+    localCheckpoint. Bounded rounds keep the plan finite for the SQL
+    oracle and bound the damage of a cycle at 10^12 edges."""
+    graphed = _GCOL in keys
     hop = base.select(
         F.col("src").alias("m"),
         F.col("dst").alias("o2"),
@@ -798,19 +889,27 @@ def describe(
     (all incident edges, no blank-node recursion — node ids here are
     content keys, so there is nothing to chase).
 
-    Two LEFT SEMI joins of the full edges table against the DISTINCT
-    resource set (one on src, one on dst) unioned — each is a
-    broadcast-able semi join keyed on the resource id, and the resource
-    set is deduped BEFORE the join so a resource described by many
-    solutions is still described once. Output keeps every edge column
-    (var/conv_id qualifiers included), so the description is directly
-    exportable via the DOT/GML/GraphML/N-Quads sinks."""
+    The resource set is deduped first, so a resource described by many
+    solutions is still described once. ``caching.driver_probe`` collects
+    it in one job when it holds at most ``_DESCRIBE_DRIVER_ROWS``
+    resources; it is then answered by ONE filtered scan of the edges
+    (``src IN R OR dst IN R``, then distinct). A larger set, left
+    persisted by the probe so the solution is not computed again, falls
+    back to two LEFT SEMI joins of the full edges table against it (one
+    on src, one on dst) unioned and deduped. Either way a null resource
+    describes nothing. Output keeps every edge column (var/conv_id
+    qualifiers included), so the description is directly exportable via
+    the DOT/GML/GraphML/N-Quads sinks."""
     v = var.lstrip("?")
     sol = match_query(edges, bgp, filters=filters, max_hops=max_hops)
     if v not in sol.columns:
         raise ValueError(f"DESCRIBE variable ?{v} is not bound (bound: "
                          f"{sol.columns})")
     res = sol.select(F.col(v).alias("r")).distinct()
+    probe = driver_probe("query.describe.res", res, _DESCRIBE_DRIVER_ROWS, _DRIVER_BYTES)
+    if probe is not None:
+        r = [row["r"] for row in probe if row["r"] is not None]
+        return edges.where(F.col("src").isin(r) | F.col("dst").isin(r)).distinct()
     as_src = edges.join(res.withColumnRenamed("r", "src"), "src", "semi")
     as_dst = edges.join(res.withColumnRenamed("r", "dst"), "dst", "semi")
     return as_src.unionByName(as_dst.select(*as_src.columns)).distinct()

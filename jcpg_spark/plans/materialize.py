@@ -81,14 +81,19 @@ def append_conversations(
     """Incremental ingest: commit a batch of NEW conversations onto a
     materialized graph, row-identical to one build over the full corpus
     (pytest-gated). Re-ingest of a materialized conv_id is refused by one
-    distinct-join on conv_id against the committed mentions table."""
+    semi join on conv_id against the committed conversation nodes (one
+    per conversation of every batch, with or without mentions)."""
     for name in STAGES:
         if not tio.is_committed(out_dir, name):
             raise ValueError(
                 f"append_conversations needs a materialized pipeline (run_pipeline) "
                 f"first; stage {name!r} is not committed in {out_dir}"
             )
-    seen = tio.read_table(spark, out_dir, "mentions").select("conv_id").distinct()
+    seen = (
+        tio.read_table(spark, out_dir, "nodes")
+        .where(F.col("kind") == "conversation")
+        .select("conv_id")
+    )
     batch_ids = new_transcripts.select("conv_id").distinct()
     if batch_ids.join(seen, "conv_id", "left_semi").limit(1).count():
         raise ValueError("new_transcripts overlaps already-materialized conv_ids")

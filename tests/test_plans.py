@@ -424,9 +424,12 @@ def test_values_table_is_broadcast_join(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_exists_and_describe_plan_semi_joins(spark):
+def test_exists_and_describe_plan_semi_joins(spark, monkeypatch):
     """FILTER EXISTS and DESCRIBE must plan LeftSemi joins (boolean
-    membership), not inner joins that would multiply solutions."""
+    membership), not inner joins that would multiply solutions; a
+    DESCRIBE whose resource set is within its driver budget is one
+    filtered scan, no join at all."""
+    from jcpg_spark.operators import query
     from jcpg_spark.operators.query import describe, match_query
 
     e = spark.createDataFrame(
@@ -435,6 +438,9 @@ def test_exists_and_describe_plan_semi_joins(spark):
     ex = match_query(e, [("?c", "call", "?t")],
                      exists=[[("?r", "return", "?c")]])
     assert "LeftSemi" in _plan(ex)
+    d = describe(e, [("?c", "call", "?t")], "?c")
+    assert "Join" not in _plan(d)
+    monkeypatch.setattr(query, "_DESCRIBE_DRIVER_ROWS", 0)
     d = describe(e, [("?c", "call", "?t")], "?c")
     assert _plan(d).count("LeftSemi") >= 2  # src-side + dst-side
 

@@ -178,22 +178,22 @@ def test_snapshot_append_time_travel_rollback_expire(spark, tmp_path):
     assert tio.read_manifest(base, "t")["rows"] == 3
     assert len(tio.snapshots(base, "t")) == 3
 
-    # expire all but the last 2 entries + current: snapshot 3's dir
-    # survives (logged), snapshot 1's dir survives (referenced by current
-    # snapshot 2) — nothing is actually deletable here
-    assert tio.expire_snapshots(base, "t", keep_last=2) == [1]
+    # expire keeps the current snapshot 2 and its parent 1 (ancestry, not
+    # log position): snapshot 3 was rolled past, so it and its dir go
+    assert tio.expire_snapshots(base, "t", keep_last=2) == [3]
     assert ids() == [1, 2, 3]
+    path = tio.table_path(base, "t")
+    assert not os.path.exists(os.path.join(path, "snap-3"))
 
-    # move current forward again: the new id must NOT collide with the
-    # logged snapshot 3 (rollback left current=2; naive current+1 would
-    # overwrite snap-3's data) — it allocates past the log maximum
+    # move current forward again: the new id must NOT reuse 3 (rollback
+    # left current=2, and 3 is no longer logged; current+1 or log max+1
+    # would hand it out again) — it allocates past the highest id ever allocated
     df4 = spark.createDataFrame([(7, "q")], "id long, v string")
     m4 = tio.write_table(df4, base, "t")  # replace
     assert m4["snapshot_id"] == 4
     expired = tio.expire_snapshots(base, "t", keep_last=1)
-    assert set(expired) == {2, 3}
+    assert set(expired) == {1, 2}
     assert ids() == [7]
-    path = tio.table_path(base, "t")
     gone = [d for d in ("snap-1", "snap-2", "snap-3") if os.path.exists(os.path.join(path, d))]
     assert gone == [], gone
     assert os.path.exists(os.path.join(path, "snap-4"))
@@ -217,6 +217,26 @@ def test_snapshot_append_time_travel_rollback_expire(spark, tmp_path):
     m6 = tio.write_table(df5.limit(0), base, "t")
     assert (m6["rows"], m6["partitions"], m6["lineage"]) == (0, 0, {})
     assert ids() == []
+
+
+def test_expire_after_rolled_back_append_drops_the_rolled_back_snapshot(spark, tmp_path):
+    """write, append, rollback to 1, append, expire: the retried append's
+    parent is 1, so the rolled-back snapshot 2 is the one expired, and
+    its directory is deleted."""
+    import os
+
+    base = str(tmp_path)
+    df = spark.createDataFrame([(1,)], "id long")
+    tio.write_table(df, base, "t")
+    tio.write_table(df, base, "t", mode="append")
+    tio.rollback(base, "t", 1)
+    assert tio.write_table(df, base, "t", mode="append")["snapshot_id"] == 3
+    assert tio.expire_snapshots(base, "t") == [2]
+    assert [(e["id"], e["op"], e["parent"]) for e in tio.snapshots(base, "t")] == [
+        (1, "replace", None), (3, "append", 1)]
+    path = tio.table_path(base, "t")
+    assert sorted(d for d in os.listdir(path) if d.startswith("snap-")) == [
+        "snap-1", "snap-3"]
 
 
 def test_snapshot_reader_isolation_during_overwrite(spark, tmp_path):
@@ -251,9 +271,16 @@ def test_append_conversations_equals_full_build(spark, dictionary, tmp_path):
     )
     from jcpg_spark.synth import synth_transcripts
 
-    t_all = synth_transcripts(spark, 16, skew=False).persist()
+    # plus a 2-turn conversation in the first batch that mentions no
+    # dictionary surface: it has no mentions rows, only a conversation node
+    quiet = spark.createDataFrame(
+        [("quiet000", 0, "user", "hello there", None, None),
+         ("quiet000", 1, "assistant", "good day", None, None)],
+        synth_transcripts(spark, 1, skew=False).schema,
+    )
+    t_all = synth_transcripts(spark, 16, skew=False).unionByName(quiet).persist()
     convs = sorted(r["conv_id"] for r in t_all.select("conv_id").distinct().collect())
-    first = convs[:10]
+    first = convs[:10] + ["quiet000"]
     t_a = t_all.filter(F.col("conv_id").isin(first))
     t_b = t_all.filter(~F.col("conv_id").isin(first))
     out = str(tmp_path / "inc")
@@ -279,9 +306,15 @@ def test_append_conversations_equals_full_build(spark, dictionary, tmp_path):
     n2 = tio.read_table(spark, out, "edges").count()
     assert n1 < n2
 
-    # re-ingest guard: same batch again must refuse
+    # re-ingest guard: same batch again must refuse, and so must the
+    # mention-less conversation of the first batch alone
+    assert not tio.read_table(spark, out, "mentions").where(
+        F.col("conv_id") == "quiet000").count()
     with _pytest.raises(ValueError, match="overlaps"):
         append_conversations(spark, t_b, dictionary, out)
+    with _pytest.raises(ValueError, match="overlaps"):
+        append_conversations(
+            spark, t_all.filter(F.col("conv_id") == "quiet000"), dictionary, out)
 
 
 def _split(spark, n_convs, n_parts):

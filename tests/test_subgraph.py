@@ -258,6 +258,102 @@ def test_path_closure_cycle_terminates_with_set_semantics(spark):
     }
 
 
+def _parity_edges(spark):
+    """Small quad set covering the closure's edge cases: a chain, a cycle
+    with a self-loop, a diamond with a shortcut, a null dst, null sources
+    reaching the diamond and the cycle, a null graph, and a second graph
+    that reuses node names (so only GRAPH ?g keeps the two apart)."""
+    return spark.createDataFrame(
+        [
+            ("a", "n", "b", "g1"), ("b", "n", "c", "g1"), ("c", "n", "d", "g1"),
+            ("x", "n", "y", "g1"), ("y", "n", "z", "g1"), ("z", "n", "x", "g1"),
+            ("y", "n", "y", "g1"),
+            ("p", "n", "q", "g1"), ("p", "n", "r", "g1"), ("q", "n", "s", "g1"),
+            ("r", "n", "s", "g1"), ("p", "n", "s", "g1"), ("s", "n", "t", "g1"),
+            ("c", "n", None, "g1"), (None, "n", "p", "g1"), (None, "n", "x", "g1"),
+            ("a", "n", "c", "g2"), ("c", "n", "a", "g2"), ("b", "n", "a", "g2"),
+            ("d", "n", "a", None),
+            ("a", "m", "p", "g1"),
+        ],
+        "src string, pred string, dst string, conv_id string",
+    )
+
+
+def test_closure_and_describe_driver_path_match_distributed(spark, monkeypatch):
+    """Below their budgets `p+` closures and DESCRIBE resource sets are
+    solved on the driver. The distributed plans run with the row budgets
+    at 0, with the byte budget at 1 (the probe then leaves its input
+    persisted for them), and, for a closure whose BFS outgrows the
+    driver, over the collected base. Every path must return the same row
+    multisets, nulls and per-graph closures included."""
+    from collections import Counter
+
+    from jcpg_spark import caching
+    from jcpg_spark.operators import query as Q
+
+    e = _parity_edges(spark)
+    cases = [([("?s", "n+", "?o")], {"max_hops": h}) for h in range(1, 6)] + [
+        ([("?s", "n*", "?o")], {"max_hops": 3}),
+        ([("?s", "^n+", "?o")], {"max_hops": 4}),
+        ([("?s", "n+", "?o")], {"max_hops": 4, "graph": "?g"}),
+        ([("?s", "m/n+", "?o")], {"max_hops": 2}),
+    ]
+    driver_runs = []
+    closure = Q._driver_closure
+    cap = [None]
+
+    def spy(rows, max_hops, graphed, max_rows):
+        driver_runs.append(closure(rows, max_hops, graphed, cap[0] or max_rows))
+        return driver_runs[-1]
+
+    monkeypatch.setattr(Q, "_driver_closure", spy)
+
+    def run_all():
+        out = [Counter(tuple(r) for r in Q.match_query(e, bgp, **kw).collect())
+               for bgp, kw in cases]
+        d = Q.describe(e, [("?s", "n", "?o")], "?o", filters=["s IN ('a', 'c')"])
+        return out + [Counter(tuple(r) for r in d.collect())], d
+
+    caching.clear_caches()
+    fast, d_fast = run_all()
+    assert len(driver_runs) == 8 and None not in driver_runs
+    assert not caching._live  # the probes released what they persisted
+    cap[0] = -1  # every BFS outgrows the driver: frontier over the collected base
+    outgrown, d_out = run_all()
+    assert len(driver_runs) == 16 and driver_runs[8:] == [None] * 8
+    assert outgrown == fast
+    cap[0] = None
+    monkeypatch.setattr(Q, "_DRIVER_BYTES", 1)
+    heavy, d_heavy = run_all()
+    assert len(driver_runs) == 16  # the probes are over the byte budget
+    assert heavy == fast
+    assert {"query.closure.base", "query.describe.res"} <= set(caching._live)
+    assert caching._live["query.describe.res"].storageLevel.useMemory
+    monkeypatch.setattr(Q, "_DRIVER_BYTES", 256 << 20)
+    monkeypatch.setattr(Q, "_CLOSURE_DRIVER_ROWS", 0)
+    monkeypatch.setattr(Q, "_DESCRIBE_DRIVER_ROWS", 0)
+    slow, d_slow = run_all()
+    assert len(driver_runs) == 16  # the probe alone is over budget
+    assert slow == fast
+    for d in (d_fast, d_out):
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan, plan
+    for d in (d_heavy, d_slow):
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("LeftSemi") >= 2, plan
+    caching.clear_caches()
+    # rows are (o, s) / (g, o, s). The cases hold what they are meant to
+    # cover: a null source carried through the diamond (s first reached at
+    # hops 2 and 3; a null key never anti-joins, so it is kept twice), a
+    # null dst kept again at a later hop, per-graph closures, and ^p+ as
+    # the transpose of p+
+    assert fast[4][("s", None)] == 2 and fast[4][(None, "c")] == 2
+    assert ("g2", "c", "b") in fast[7] and ("g2", "d", "b") not in fast[7]
+    assert ("a", "c") in fast[3] and ("g1", "a", "c") not in fast[7]
+    assert fast[6] == Counter({(s, o): n for (o, s), n in fast[3].items()})
+    assert fast[-1]
+
+
 def test_match_query_optional_filter_distinct(spark):
     """OPTIONAL = left join on shared vars (NULL-filled when unmatched);
     FILTER = post-join SQL expression; DISTINCT collapses the bag."""
