@@ -9,11 +9,15 @@ bucketing (``spark.read.parquet`` has no bucket spec a join could use).
 
 - ``write_table`` writes parquet under a per-snapshot directory then
   atomically commits the pointer manifest (write temp + rename) recording
-  row count, schema, per-partition lineage (partition id -> rows, read
-  from the written files' footers), and the full snapshot log — the
-  bookkeeping an Iceberg snapshot + manifest list carries.
+  row count, schema (a DDL string), per-partition lineage (partition id
+  -> rows, read from the written files' footers), and the full snapshot
+  log — the bookkeeping an Iceberg snapshot + manifest list carries.
   ``mode="append"`` commits an O(new-data) append snapshot (parent
-  directories + one new), no rewrite.
+  directories + one new), no rewrite, and refuses a frame whose schema
+  differs from the table's.
+- Reads take the schema from the manifest, as an Iceberg reader takes it
+  from table metadata: no footer is opened to infer it, so building a
+  read DataFrame launches no Spark job.
 - ``read_table(snapshot=...)`` time-travels to any logged snapshot
   (``VERSION AS OF``); ``read_added`` reads only the rows the current
   snapshot added (the incremental append scan); ``rollback`` is an
@@ -176,6 +180,12 @@ def write_table(df: DataFrame, base_dir: str, name: str, mode: str = "replace") 
     time-travels and ``rollback`` is a pointer swap. ``df`` is written
     as given: no repartition, no added column.
 
+    Each snapshot records the schema a read of its files gives (the
+    frame's schema with every field nullable, as parquet reads it back) as
+    one DDL string, which ``read_table`` / ``read_added`` hand to the
+    reader. An append whose schema differs from the current snapshot's
+    raises ``ValueError`` before anything is written.
+
     Manifest content stays deterministic (no timestamps): snapshot ids
     are a monotone counter, lineage is partition id -> rows of the data
     actually written.
@@ -188,6 +198,11 @@ def write_table(df: DataFrame, base_dir: str, name: str, mode: str = "replace") 
         prev = read_manifest(base_dir, name)
     if mode == "append" and prev is None:
         mode = "replace"  # first commit of a table is always a replace
+    ddl = df.schema.toNullable().toDDL()
+    if mode == "append" and isinstance(prev["schema"], str) and ddl != prev["schema"]:
+        raise ValueError(
+            f"append to {name!r} with schema {ddl!r}; the table's is {prev['schema']!r}"
+        )
     # allocate past the highest id ever allocated, not current+1 nor the log
     # maximum: after a rollback the current pointer sits below later
     # snapshots, and an expired snapshot's id must not come back either
@@ -211,7 +226,7 @@ def write_table(df: DataFrame, base_dir: str, name: str, mode: str = "replace") 
         "partitions": len(lineage),
         "lineage": lineage,
         "data_dirs": data_dirs,
-        "schema": [f.name for f in df.schema.fields],
+        "schema": ddl,
     }
     log = (prev["snapshots"] if prev else []) + [entry]
     manifest = {
@@ -252,18 +267,25 @@ def read_table(
     committed snapshot id (Iceberg ``VERSION AS OF`` time travel)."""
     man = read_manifest(base_dir, name)
     entry = _snapshot_entry(man, snapshot) if snapshot is not None else man
-    return _read_dirs(spark, base_dir, name, entry["data_dirs"])
+    return _read_dirs(spark, base_dir, name, entry["data_dirs"], entry["schema"])
 
 
 def read_added(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     """Rows the CURRENT snapshot added (Iceberg's incremental append scan):
     the new directory of an append, the whole table after a replace."""
-    return _read_dirs(spark, base_dir, name, read_manifest(base_dir, name)["data_dirs"][-1:])
+    man = read_manifest(base_dir, name)
+    return _read_dirs(spark, base_dir, name, man["data_dirs"][-1:], man["schema"])
 
 
-def _read_dirs(spark: SparkSession, base_dir: str, name: str, dirs: list[str]) -> DataFrame:
+def _read_dirs(
+    spark: SparkSession, base_dir: str, name: str, dirs: list[str], schema: str | list
+) -> DataFrame:
+    """Scan ``dirs`` of the table with the manifest's DDL ``schema``; a
+    manifest written before schemas were stored as DDL holds a column-name
+    list, and its files' schema is inferred from a footer as before."""
     path = table_path(base_dir, name)
-    return spark.read.parquet(*[os.path.join(path, d) for d in dirs])
+    reader = spark.read.schema(schema) if isinstance(schema, str) else spark.read
+    return reader.parquet(*[os.path.join(path, d) for d in dirs])
 
 
 def read_manifest(base_dir: str, name: str) -> dict:

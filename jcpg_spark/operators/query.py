@@ -122,8 +122,7 @@ def _driver_closure(rows: list, max_hops: int, graphed: bool, max_rows: int) -> 
 
     It reproduces the distributed rounds row for row, SQL nulls included:
     a null mid node (or, under GRAPH, a null graph) never joins a hop; a
-    null source is carried like any other; a level keeps only pairs the
-    anti-join would keep — every pair with a null key, else the pairs not
+    null source is carried like any other; a level keeps the pairs not
     reached before. Under GRAPH the graph is part of the node key, so a
     path never crosses graphs."""
     starts: dict = {}
@@ -136,23 +135,18 @@ def _driver_closure(rows: list, max_hops: int, graphed: bool, max_rows: int) -> 
             adj.setdefault((s, g), []).append(d)
     src, dst, gra = [], [], []
     for (s, g), level in starts.items():
-        joins = g is not None or not graphed
-        matchable = s is not None and joins
         seen = set(level)
         for hop in range(1, max_hops + 1):
             if hop > 1:
-                nxt = {d2 for d in level if d is not None for d2 in adj.get((d, g), ())}
-                if matchable:
-                    nxt = {d for d in nxt if d is None or d not in seen}
-                    seen |= nxt
-                level = list(nxt)
+                level = list({d2 for d in level for d2 in adj.get((d, g), ())} - seen)
+                seen.update(level)
             src.extend([s] * len(level))
             dst.extend(level)
             if graphed:
                 gra.extend([g] * len(level))
             if len(src) > max_rows:
                 return None
-            if not (level and joins):
+            if not level:
                 break
     return [src, dst, gra] if graphed else [src, dst]
 
@@ -207,15 +201,19 @@ def _frontier_closure(base: DataFrame, max_hops: int, keys: list) -> DataFrame:
     the probe's persist or by the collected rows): frontier expansion (the
     bfs_distances move, on pairs). Each round joins only the PREVIOUS
     round's new pairs against the 1-hop base and anti-joins everything
-    already reached, so a pair crosses the shuffle in exactly one round; lineage is cut per round with a lazy
-    localCheckpoint. Bounded rounds keep the plan finite for the SQL
-    oracle and bound the damage of a cycle at 10^12 edges."""
+    already reached (null-safe, so pairs with a null key keep set
+    semantics too), so a pair crosses the shuffle in exactly one round;
+    lineage is cut per round with a lazy localCheckpoint. Bounded rounds
+    keep the plan finite for the SQL oracle and bound the damage of a
+    cycle at 10^12 edges."""
     graphed = _GCOL in keys
     hop = base.select(
         F.col("src").alias("m"),
         F.col("dst").alias("o2"),
         *([F.col(_GCOL).alias("hg")] if graphed else []),
     )
+    # null-safe: a pair with a null key was reached like any other
+    seen = [F.col(f"n.{k}").eqNullSafe(F.col(f"r.{k}")) for k in keys]
     reach, frontier = base, base
     for _h in range(2, max_hops + 1):
         cond = frontier["dst"] == hop["m"]
@@ -229,7 +227,8 @@ def _frontier_closure(base: DataFrame, max_hops: int, keys: list) -> DataFrame:
                 *([frontier[_GCOL]] if graphed else []),
             )
             .distinct()
-            .join(reach, keys, "left_anti")
+            .alias("n")
+            .join(reach.alias("r"), seen, "left_anti")
             .localCheckpoint(eager=False)
         )
         reach = reach.unionByName(nxt)

@@ -73,12 +73,23 @@ def edge_layers(
     )
 
 
-def node_layers(transcripts: DataFrame, m: DataFrame, linked: DataFrame) -> DataFrame:
+def node_layers(
+    transcripts: DataFrame,
+    m: DataFrame,
+    linked: DataFrame,
+    committed_ids: DataFrame | None = None,
+) -> DataFrame:
     """Union of every node layer (shared by build_graph and materialize).
 
     Turn nodes carry the per-turn DEF/USE sets in their property bag — the
     reference's per-node defs/uses arrays (CodePropertyGraph.java:202-203,
     308-309), carried into the GML/JSON exports.
+
+    The global layers (entity, tool, role, namespace: ``conv_id`` null) come
+    last. ``committed_ids`` (the ``node_id`` of the global nodes already
+    materialized: vocabulary-sized, so broadcast) drops the global nodes an
+    earlier batch committed. The per-conversation layers stay first and
+    untouched, so their generated code is the same with or without it.
     """
     turn_nodes = (
         structural.turn_nodes(transcripts)
@@ -91,16 +102,21 @@ def node_layers(transcripts: DataFrame, m: DataFrame, linked: DataFrame) -> Data
         )
         .drop("defs", "uses")
     )
+    global_nodes = (
+        references.entity_nodes(linked)
+        .unionByName(calls.tool_nodes(transcripts))
+        .unionByName(calls.role_nodes(transcripts))
+        .unionByName(linking.namespace_nodes(linked))
+    )
+    if committed_ids is not None:
+        global_nodes = global_nodes.join(F.broadcast(committed_ids), "node_id", "left_anti")
     return (
         structural.conversation_nodes(transcripts)
         .unionByName(turn_nodes)
         .unionByName(mentions.mention_nodes(m))
-        .unionByName(references.entity_nodes(linked))
-        .unionByName(calls.tool_nodes(transcripts))
-        .unionByName(calls.role_nodes(transcripts))
         .unionByName(structural.segment_nodes(transcripts))
         .unionByName(structural.sentence_nodes(transcripts))
-        .unionByName(linking.namespace_nodes(linked))
+        .unionByName(global_nodes)
     )
 
 

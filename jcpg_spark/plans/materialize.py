@@ -18,7 +18,7 @@ commits it in; a table's first append is a replace):
       -> alias_mapping       replace  (union-find over the committed
                                        mapping pairs + the batch's alias pairs)
       -> edges               append   (all triple layers)
-      -> nodes               append
+      -> nodes               append   (global nodes only when new)
       -> canonical           replace  (all of linked x current mapping)
       -> _metrics            replace  (per-pred triple counts of the graph)
 
@@ -82,25 +82,27 @@ def append_conversations(
     materialized graph, row-identical to one build over the full corpus
     (pytest-gated). Re-ingest of a materialized conv_id is refused by one
     semi join on conv_id against the committed conversation nodes (one
-    per conversation of every batch, with or without mentions)."""
+    per conversation of every batch, with or without mentions); the same
+    read of ``nodes`` gives the committed global node ids, which the
+    batch's nodes stage does not emit again."""
     for name in STAGES:
         if not tio.is_committed(out_dir, name):
             raise ValueError(
                 f"append_conversations needs a materialized pipeline (run_pipeline) "
                 f"first; stage {name!r} is not committed in {out_dir}"
             )
-    seen = (
-        tio.read_table(spark, out_dir, "nodes")
-        .where(F.col("kind") == "conversation")
-        .select("conv_id")
-    )
+    nodes = tio.read_table(spark, out_dir, "nodes")
+    seen = nodes.where(F.col("kind") == "conversation").select("conv_id")
     batch_ids = new_transcripts.select("conv_id").distinct()
     if batch_ids.join(seen, "conv_id", "left_semi").limit(1).count():
         raise ValueError("new_transcripts overlaps already-materialized conv_ids")
 
     before = {name: tio.read_manifest(out_dir, name)["snapshot_id"] for name in STAGES}
     try:
-        summary = _commit_batch(spark, new_transcripts, dictionary, out_dir, set())
+        summary = _commit_batch(
+            spark, new_transcripts, dictionary, out_dir, set(),
+            nodes.where(F.col("conv_id").isNull()).select("node_id"),
+        )
     except BaseException:
         for name, snap in before.items():
             if tio.read_manifest(out_dir, name)["snapshot_id"] != snap:
@@ -112,10 +114,23 @@ def append_conversations(
 
 
 def _commit_batch(
-    spark: SparkSession, batch: DataFrame, dictionary: DataFrame, out_dir: str, skip: set
+    spark: SparkSession,
+    batch: DataFrame,
+    dictionary: DataFrame,
+    out_dir: str,
+    skip: set,
+    global_ids: DataFrame | None = None,
 ) -> RunSummary:
     """Commit ``batch`` through every stage in order; a stage in ``skip``
-    is already committed and is not recomputed."""
+    is already committed and is not recomputed.
+
+    ``global_ids`` (an append's) are the ``node_id`` of the global nodes
+    (entity, tool, role, namespace: ``conv_id`` null) earlier batches
+    committed; the batch's nodes stage emits only the global nodes not yet
+    among them. A batch cannot change an entity node that is already
+    committed: its props are ``max(kind)`` / ``max(namespace)`` over the
+    canonical's linked mentions, which equal the first batch's as long as
+    the dictionary gives each canonical one kind and one namespace."""
     summary = RunSummary(out_dir=out_dir)
 
     def stage(name: str, compute, mode: str) -> None:
@@ -129,7 +144,8 @@ def _commit_batch(
             summary.stages_computed.append(name)
 
     batch = caching.swap_persist("materialize.batch", batch)
-    surfaces = [r["surface"] for r in dictionary.select("surface").distinct().collect()]
+    # detect_mentions dedupes the list: one job per batch, no shuffle
+    surfaces = [r["surface"] for r in dictionary.select("surface").collect()]
 
     stage(
         "mentions",
@@ -161,7 +177,7 @@ def _commit_batch(
         return edge_layers(batch, m, linked, same_as)
 
     stage("edges", _edges, "append")
-    stage("nodes", lambda: node_layers(batch, m, linked), "append")
+    stage("nodes", lambda: node_layers(batch, m, linked, global_ids), "append")
     stage(
         "canonical",
         lambda: canonicalize.canonical_map(tio.read_table(spark, out_dir, "linked"), mapping),

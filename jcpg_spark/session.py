@@ -80,6 +80,21 @@ def get_spark(
         # every parallelism level alike. Off by default here; re-enable via
         # extra_conf when chasing a cryptic analysis error.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-code cache (its size is a static conf: it takes effect
+        # only when this call starts the JVM). A build + append + query-pass round of the
+        # benchmark compiles 264 distinct classes (seed 1 of either workload:
+        # build 200, append 24, query pass 40, 4-core host, counted by
+        # tools/codegen_working_set.py). Spark's default of 100 entries holds
+        # less than the build, so the append compiled 201-202 classes again;
+        # at 1 000 entries it compiles 24, and the JVM's metaspace after the
+        # round is 167.2-167.4 MB against 166.1-168.5 MB at 100.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # The cache is keyed on the generated source, which by default names
+        # the class after its whole-stage-codegen stage id, so the same
+        # operator code at another stage position (an append's plans have a
+        # few more stages than the build's) missed the cache: with the id in
+        # the name the append compiled 48 classes instead of 24.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -239,6 +239,46 @@ def test_expire_after_rolled_back_append_drops_the_rolled_back_snapshot(spark, t
         "snap-1", "snap-3"]
 
 
+def test_manifest_ddl_schema_guard_rollback_and_name_list_fallback(spark, tmp_path):
+    """Each snapshot records its read-back schema as DDL; an append of
+    another schema is refused before anything is written; rollback restores
+    the snapshot's DDL; a manifest whose schema is a column-name list (the
+    older format) still reads, by footer inference."""
+    import os
+
+    base = str(tmp_path)
+    path = tio.table_path(base, "t")
+    df1 = spark.createDataFrame([(1, "a")], "id long not null, v string")
+    m1 = tio.write_table(df1, base, "t")
+    assert m1["schema"] == m1["snapshots"][0]["schema"] == "id BIGINT,v STRING"
+
+    bad = spark.createDataFrame([(2, 3)], "id long, v int")
+    with pytest.raises(ValueError, match="schema"):
+        tio.write_table(bad, base, "t", mode="append")
+    assert tio.read_manifest(base, "t") == m1
+    assert sorted(d for d in os.listdir(path) if d.startswith("snap-")) == ["snap-1"]
+
+    m2 = tio.write_table(spark.createDataFrame([(5,)], "n int"), base, "t")  # replace
+    assert m2["schema"] == "n INT"
+    assert tio.rollback(base, "t", 1)["schema"] == m1["schema"]
+    got = tio.read_table(spark, base, "t")
+    assert got.schema == spark.read.parquet(os.path.join(path, "snap-1")).schema
+    assert [tuple(r) for r in got.collect()] == [(1, "a")]
+    assert tio.read_table(spark, base, "t", snapshot=2).columns == ["n"]
+
+    man = tio.read_manifest(base, "t")
+    man["schema"] = ["id", "v"]
+    for e in man["snapshots"]:
+        e["schema"] = [f.name for f in spark.read.parquet(
+            *[os.path.join(path, d) for d in e["data_dirs"]]).schema]
+    tio._commit_pointer(path, man)
+    assert [tuple(r) for r in tio.read_table(spark, base, "t").collect()] == [(1, "a")]
+    assert tio.read_table(spark, base, "t", snapshot=2).columns == ["n"]
+    m3 = tio.write_table(df1, base, "t", mode="append")  # no DDL to check against
+    assert m3["schema"] == "id BIGINT,v STRING"
+    assert tio.read_table(spark, base, "t").count() == 2
+
+
 def test_snapshot_reader_isolation_during_overwrite(spark, tmp_path):
     """A DataFrame resolved against the old snapshot still reads the old
     data after a new replace commit — the atomic-pointer property the
@@ -260,6 +300,8 @@ def test_append_conversations_equals_full_build(spark, dictionary, tmp_path):
     append_conversations on the second == build_graph over the full
     corpus, row-identical — including same_as merges that span the two
     batches (the canonicalization is re-solved, not appended)."""
+    from collections import Counter
+
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -305,6 +347,18 @@ def test_append_conversations_equals_full_build(spark, dictionary, tmp_path):
     n1 = tio.read_table(spark, out, "edges", snapshot=1).count()
     n2 = tio.read_table(spark, out, "edges").count()
     assert n1 < n2
+
+    # nodes compose too: the append emits only the global nodes (entity,
+    # tool, role, namespace) the build had not committed
+    def canon(df):  # props is a map -> make rows hashable
+        return Counter(
+            tuple(v if not isinstance(v, dict) else tuple(sorted(v.items())) for v in r)
+            for r in df.collect()
+        )
+
+    got_nodes = canon(tio.read_table(spark, out, "nodes"))
+    assert got_nodes == canon(build_graph(spark, t_all, dictionary).nodes)
+    assert max(got_nodes.values()) == 1
 
     # re-ingest guard: same batch again must refuse, and so must the
     # mention-less conversation of the first batch alone
@@ -383,3 +437,40 @@ def test_build_and_appends_hold_one_cached_batch(spark, dictionary, tmp_path):
     got = sorted(tuple(r) for r in read_graph_edges(spark, out).collect())
     want = sorted(tuple(r) for r in build_graph(spark, t_all, dictionary).edges.collect())
     assert got == want and want
+
+
+def test_warm_append_reads_manifest_schemas_and_reuses_compiled_code(
+    spark, dictionary, tmp_path
+):
+    """After a build, an append in the same session finds the build's
+    generated classes in the codegen cache (at most 40 new compiles), and
+    every committed table reads with the schema its manifest records:
+    equal to what footer inference gives, with no Spark job to build the
+    read."""
+    import os
+
+    from jcpg_spark.plans.materialize import append_conversations
+
+    _t_all, (t_a, t_b) = _split(spark, 12, 2)
+    out = str(tmp_path / "inc")
+    run_pipeline(spark, t_a, dictionary, out)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    before = compiles.getCount()
+    append_conversations(spark, t_b, dictionary, out)
+    assert compiles.getCount() - before <= 40, compiles.getCount() - before
+
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-reads", "read_table / read_added with manifest schemas")
+    try:
+        reads = {name: (tio.read_table(spark, out, name), tio.read_added(spark, out, name))
+                 for name in STAGES}
+        assert list(sc.statusTracker().getJobIdsForGroup("manifest-reads")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for name, (current, added) in reads.items():
+        path = tio.table_path(out, name)
+        dirs = tio.read_manifest(out, name)["data_dirs"]
+        inferred = spark.read.parquet(*[os.path.join(path, d) for d in dirs]).schema
+        assert current.schema == inferred, name
+        assert added.schema == inferred, name

@@ -343,11 +343,11 @@ def test_closure_and_describe_driver_path_match_distributed(spark, monkeypatch):
         assert plan.count("LeftSemi") >= 2, plan
     caching.clear_caches()
     # rows are (o, s) / (g, o, s). The cases hold what they are meant to
-    # cover: a null source carried through the diamond (s first reached at
-    # hops 2 and 3; a null key never anti-joins, so it is kept twice), a
-    # null dst kept again at a later hop, per-graph closures, and ^p+ as
-    # the transpose of p+
-    assert fast[4][("s", None)] == 2 and fast[4][(None, "c")] == 2
+    # cover: a null source carried through the diamond (s reached at hops 2
+    # and 3, kept once: the anti join is null-safe), a null dst reached
+    # again at a later hop and kept once, per-graph closures, and ^p+ as the
+    # transpose of p+
+    assert fast[4][("s", None)] == 1 and fast[4][(None, "c")] == 1
     assert ("g2", "c", "b") in fast[7] and ("g2", "d", "b") not in fast[7]
     assert ("a", "c") in fast[3] and ("g1", "a", "c") not in fast[7]
     assert fast[6] == Counter({(s, o): n for (o, s), n in fast[3].items()})
